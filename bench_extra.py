@@ -39,8 +39,8 @@ BENCH_QUERIES = (
     "simhash",
     "doc_stats",
     "knn_bruteforce",
+    "lsh_dup_pairs",
 )
-EAGER_BENCH_QUERIES = ("lsh_dup_pairs",)
 
 
 def _session():
@@ -89,26 +89,12 @@ def cmd_queries(names) -> None:
 
     spark = _session()
     reps = int(os.environ.get("SPARK_GRAFT_EXTRA_REPS", "3"))
-    sel = names or list(BENCH_QUERIES) + list(EAGER_BENCH_QUERIES) + [
-        "ivf_knn_fast"
-    ]
+    sel = names or list(BENCH_QUERIES) + ["ivf_knn_fast"]
     out = {}
     for name in sel:
         sc = spark.sparkContext
         if name == "ivf_knn_fast":
             df = _ivf_knn_fast_df(spark)
-        elif name in EAGER_BENCH_QUERIES:
-            # timed COLD like bench.py: build + materialize end to end
-            sc.setJobDescription(f"{name}: cold build+noop")
-            times = []
-            for _ in range(reps):
-                t0 = time.time()
-                _noop(QUERIES[name](spark, SF_DIR))
-                times.append(round(time.time() - t0, 3))
-            _dump_plan(name, QUERIES[name](spark, SF_DIR))
-            out[name] = {"secs": times, "min": min(times)}
-            print(json.dumps({name: out[name]}), flush=True)
-            continue
         else:
             df = QUERIES[name](spark, SF_DIR)
         _dump_plan(name, df)
@@ -138,7 +124,6 @@ def cmd_sweep() -> None:
         dup_components,
         lsh_candidate_pairs,
         minhash_signature_fast,
-        release_signature_caches,
     )
 
     spark = _session()
@@ -181,7 +166,6 @@ def cmd_sweep() -> None:
         pairs = lsh_candidate_pairs(
             minhash_signature_fast(corpus, k=cfg.minhash_k, n_bands=cfg.minhash_bands)
         ).localCheckpoint(eager=True)
-        release_signature_caches()
         n_pairs = pairs.count()
         pairs_sec = time.time() - t0
 

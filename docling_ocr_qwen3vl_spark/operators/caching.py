@@ -1,24 +1,18 @@
-"""Session-lifetime registry for persisted helper DataFrames.
+"""Thread-scoped registry for the streaming dedup's per-batch caches.
 
-Operators that reference one projection many times in a single plan
-(banded LSH self-joins, bucketed near-dup self-joins) persist that
-projection so its pandas-UDF kernel runs ONCE instead of once per plan
-reference (measured 16x at 8 bands — the difference between 93 s and
-387 s on a 640k-doc sweep).  persist() alone is a leak across a long
-driver run or a serve process: the MEMORY_AND_DISK blocks outlive the
-query that created them and a module-global strong reference would stop
-the ContextCleaner reclaiming them.  Every such cache is therefore
-registered HERE, and callers release it the moment the downstream result
-is materialized (checkpointed / written / collected):
+A foreachBatch body reads one batch's signature projection from several
+separate actions (the components fixpoint loop, the survivors write, the
+store-key write), and exchange reuse only works inside one plan, so the
+projection is persisted.  persist() alone is a leak across a long-lived
+stream: the MEMORY_AND_DISK blocks would outlive the batch that created
+them.  The batch body therefore registers each such cache here and runs
+inside ``scoped_caches()``, which unpersists everything registered in the
+block on exit.  The body must MATERIALIZE its outputs (write / collect)
+before the block ends; unpersist is always safe (a still-referenced plan
+recomputes), but releasing early forfeits the single computation.
 
-  * ``scoped_caches()`` — the preferred form: everything registered inside
-    the ``with`` block is unpersisted on exit.  The body must MATERIALIZE
-    its result (eager localCheckpoint / write / collect) before the block
-    ends; unpersist is always safe (a still-referenced plan recomputes),
-    but releasing before materialization forfeits the single-computation
-    guarantee.
-  * ``release_caches()`` — drain everything; for ad-hoc callers that own
-    the whole lifecycle (the bench sweep).
+The batch operators need no cache: their self-joins repartition once and
+Spark reuses that exchange for both sides (see lsh_candidate_pairs).
 """
 
 from __future__ import annotations
@@ -29,44 +23,22 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame
 
-# (kind, df, owner_thread_id).  All registry mutation happens under _LOCK:
-# two concurrent registrants (streaming foreachBatch queries, the serve
-# worker beside a driver query) must never interleave a read-modify-write
-# of the list — a lost entry is a persisted-block leak for the session, and
-# a scope releasing a concurrent thread's still-unmaterialized cache
-# reintroduces the N-reference recompute the cache exists to prevent.
-_LIVE_CACHES: list[tuple[str, DataFrame, int]] = []
+# (df, owner_thread_id).  All registry mutation happens under _LOCK: two
+# concurrent registrants (two streaming queries' foreachBatch threads)
+# must never interleave a read-modify-write of the list — a lost entry is
+# a persisted-block leak for the session, and a scope releasing a
+# concurrent thread's still-unmaterialized cache reintroduces the
+# recompute the cache exists to prevent.
+_LIVE_CACHES: list[tuple[DataFrame, int]] = []
 _LOCK = threading.Lock()
 
 
-def register_cache(df: DataFrame, kind: str = "generic") -> DataFrame:
-    """Track a just-persisted DataFrame for later release; returns it.
-
-    ``kind`` scopes bulk release: ``release_caches("signatures")`` drains
-    only the MinHash signature projections, so a caller following one
-    operator's release contract cannot unpersist another operator's
-    still-unmaterialized cache (and silently reintroduce its N-reference
-    recompute)."""
+def register_cache(df: DataFrame) -> DataFrame:
+    """Track a just-persisted DataFrame for release by the enclosing
+    ``scoped_caches()``; returns it."""
     with _LOCK:
-        _LIVE_CACHES.append((kind, df, threading.get_ident()))
+        _LIVE_CACHES.append((df, threading.get_ident()))
     return df
-
-
-def release_caches(kind: str | None = None) -> None:
-    """Unpersist live registered caches — all of them, or only ``kind``.
-
-    Deliberately NOT thread-scoped: this is the explicit whole-lifecycle
-    drain (bench sweeps, shutdown paths) and may release entries other
-    threads registered — callers own that contract."""
-    with _LOCK:
-        drain = [
-            (k, df) for k, df, _ in _LIVE_CACHES if kind is None or k == kind
-        ]
-        _LIVE_CACHES[:] = [
-            e for e in _LIVE_CACHES if not (kind is None or e[0] == kind)
-        ]
-    for _, df in drain:
-        df.unpersist(blocking=False)
 
 
 @contextmanager
@@ -75,28 +47,28 @@ def scoped_caches() -> Iterator[None]:
     — including on error paths.  Only caches registered after entry, by the
     entering thread, are touched, so scopes nest, never release an outer
     scope's still-needed cache, and never unpersist a CONCURRENT thread's
-    cache registered mid-scope (two streaming foreachBatch workers each run
+    cache registered mid-scope (two streaming foreachBatch threads each run
     their own scope; neither may force the other's recompute).
 
     Entry membership is tracked by IDENTITY, not list position: a
-    kind-filtered ``release_caches`` inside the scope may remove entries
-    registered BEFORE it, which would shift a positional mark and let
-    inner entries escape the scope.  The snapshot holds REFERENCES (not
-    bare id() ints) so a pre-entry object released and garbage-collected
-    mid-scope cannot donate its recycled address to an inner entry."""
+    concurrent scope exiting mid-block removes entries registered BEFORE
+    this one, which would shift a positional mark.  The snapshot holds
+    REFERENCES (not bare id() ints) so a pre-entry object released and
+    garbage-collected mid-scope cannot donate its recycled address to an
+    inner entry."""
     me = threading.get_ident()
     with _LOCK:
-        before = [df for _, df, _ in _LIVE_CACHES]
+        before = [df for df, _ in _LIVE_CACHES]
     try:
         yield
     finally:
         with _LOCK:
             keep, drop = [], []
-            for k, df, tid in _LIVE_CACHES:
+            for df, tid in _LIVE_CACHES:
                 if tid == me and not any(df is b for b in before):
                     drop.append(df)
                 else:
-                    keep.append((k, df, tid))
+                    keep.append((df, tid))
             _LIVE_CACHES[:] = keep
         for df in drop:
             df.unpersist(blocking=False)

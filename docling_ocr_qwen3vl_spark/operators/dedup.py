@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..functions.text_fns import words
-from .caching import register_cache, release_caches, scoped_caches
 
 N_MINHASHES = 8
 SHINGLE_WIDTH = 3
@@ -287,74 +286,40 @@ def minhash_signature_fast(
     return out.withColumns(cols).drop("_sig")
 
 
-# Signature-projection caches live in the shared operator registry
-# (operators/caching.py); release once downstream results are MATERIALIZED
-# (checkpointed/written) — pipeline operators that materialize internally
-# (near_duplicate_components, the registered dedup queries, the bench
-# sweep) scope-release themselves; ad-hoc callers own the lifecycle.
-def release_signature_caches() -> None:
-    """Drain only the signature-projection caches (kind='signatures')
-    — other operators' still-live caches are untouched."""
-    release_caches("signatures")
-
-
 def band_cols(df: DataFrame) -> list[str]:
     """The LSH band-key columns of a signature table (band0, band1, ...).
-    THE single definition of the column contract — the streaming dedup's
-    melt and the pair join below must agree on it."""
+    THE single definition of the column contract — melt_bands below and
+    everything built on it must agree on it."""
     return [c for c in df.columns if re.fullmatch(r"band\d+", c)]
+
+
+def melt_bands(signatures: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(id, band0..bandN) -> (id, bi, bk): one row per band, ``bi`` the
+    band index and ``bk`` its key.  (bi, bk) equality is exactly per-band
+    key equality, so one join on it replaces one join per band."""
+    bands = band_cols(signatures)
+    if not bands:
+        raise ValueError("signature table has no bandN columns")
+    return signatures.select(
+        F.col(id_col), F.posexplode(F.array(*bands)).alias("bi", "bk")
+    )
 
 
 def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Distinct candidate pairs sharing at least one LSH band.
 
-    Self-join per band key (equi-join -> hash shuffle on the band, never a
-    cartesian) over every band column present in the signature table,
-    union, distinct.  Output: (doc_a, doc_b), doc_a < doc_b.
+    ONE equi self-join of the melted band table on (bi, bk) — a hash
+    shuffle on the band key, never a cartesian — then distinct.  Output:
+    (doc_a, doc_b), doc_a < doc_b.
 
-    The plan references the signature table 2 x n_bands times; WITHOUT a
-    cache boundary Spark would re-run the MinHash kernel on every reference
-    (measured 16x the kernel cost at 8 bands — the difference between 30 s
-    and 390 s on a 640k-doc sweep).  The (id, bands) projection — sig lanes
-    pruned — is therefore persisted; at 100 TB this is the "compute
-    signatures once, land them in a table" step a production pipeline makes
-    explicit.
+    The melted table is repartitioned on the join key once and both join
+    sides read that repartition: their exchanges are identical, so Spark
+    plans the second as a ReusedExchange of the first and the signature
+    kernel runs ONCE with no cache (without the shared exchange each side
+    re-runs the kernel).  The plan carries one band exchange however many
+    bands there are (tests/test_plan_hygiene.py asserts the shape).
     """
-    from pyspark import StorageLevel
-
-    bands = band_cols(signatures)
-    if not bands:
-        raise ValueError("signature table has no bandN columns")
-    lvl = signatures.storageLevel
-    if (lvl.useMemory or lvl.useDisk) and set(signatures.columns) == {
-        id_col, *bands
-    }:
-        # the input IS an already-persisted slim projection (e.g. the
-        # streaming dedup's per-batch cache) — re-persisting it would hold
-        # two MEMORY_AND_DISK copies of identical data; the caller owns
-        # its cache's lifecycle
-        keyed = signatures
-    else:
-        # registered so finished pipelines can release it (a plan can
-        # reference this function's output more than once — e.g. the
-        # two-kernel union — so eager unpersist-previous here would
-        # reintroduce the recompute); see operators/caching.py
-        keyed = register_cache(
-            signatures.select(id_col, *bands).persist(
-                StorageLevel.MEMORY_AND_DISK
-            ),
-            kind="signatures",
-        )
-    # ONE melted self-join on (band index, band key) instead of one join
-    # per band + union: the pair set is identical (a pair collides iff it
-    # shares SOME band — (bi, bk) equality is exactly per-band equality),
-    # but the plan reads the cached projection 2x instead of 2 x n_bands
-    # times and carries 2 exchanges instead of 2 x n_bands (round 6: the
-    # 1.28M-doc sweep pairs stage runs within ~1 s of the bare signature
-    # kernel, i.e. the join machinery all but disappears; same n_pairs).
-    melted = keyed.select(
-        F.col(id_col), F.posexplode(F.array(*bands)).alias("bi", "bk")
-    )
+    melted = melt_bands(signatures, id_col).repartition("bi", "bk")
     left = melted.select(F.col(id_col).alias("doc_a"), "bi", "bk")
     right = melted.select(F.col(id_col).alias("doc_b"), "bi", "bk")
     return (
@@ -528,15 +493,10 @@ def near_duplicate_components(
     sigs = minhash_signature_fast(
         docs, text_col=text_col, k=cfg.minhash_k, n_bands=cfg.minhash_bands
     )
-    # dup_components eagerly checkpoints the edge set, so THIS call's
-    # signature cache is fully consumed inside the scope (only ours:
-    # earlier registry entries may belong to plans not yet executed)
-    with scoped_caches():
-        pairs = lsh_candidate_pairs(sigs, id_col=id_col)
-        comps = dup_components(
-            docs.select(id_col), pairs, id_col=id_col, stats_out=stats_out
-        )
-    return comps
+    pairs = lsh_candidate_pairs(sigs, id_col=id_col)
+    return dup_components(
+        docs.select(id_col), pairs, id_col=id_col, stats_out=stats_out
+    )
 
 
 def propagation_round(

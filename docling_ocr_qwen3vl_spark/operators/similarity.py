@@ -147,22 +147,15 @@ def bucketed_near_duplicates(
     assign = assign_buckets_fast if fast else assign_buckets
     b = assign(embeddings, vec_col)
     if fast:
-        # the self-join references b twice; without a cache boundary the
-        # bucket UDF would project every vector against all planes TWICE
-        # (the lsh_candidate_pairs 16x-recompute pitfall).  Pair scoring
-        # stays per-pair (cosine_fast): within-bucket pair counts are the
-        # recall knob's own output and hot buckets split via AQE skew-join;
-        # a per-bucket matmul variant would ship vectors once per side but
-        # cannot salt (pairs must cross shard boundaries within a bucket).
-        # Registered in the shared cache registry so repeated fast-path
-        # invocations (a bench sweep loop) don't accumulate blocks for the
-        # session lifetime — callers release once the pairs materialize
-        # (scoped_caches() / release_caches(), operators/caching.py).
-        from pyspark import StorageLevel
-
-        from .caching import register_cache
-
-        b = register_cache(b.persist(StorageLevel.MEMORY_AND_DISK), kind="buckets")
+        # the self-join reads b twice; repartitioning on the join key once
+        # makes both sides the same exchange, which Spark reuses, so the
+        # bucket UDF projects every vector ONCE (see lsh_candidate_pairs).
+        # Pair scoring stays per-pair (cosine_fast): within-bucket pair
+        # counts are the recall knob's own output and hot buckets split via
+        # AQE skew-join; a per-bucket matmul variant would ship vectors once
+        # per side but cannot salt (pairs must cross shard boundaries
+        # within a bucket).
+        b = b.repartition("bucket")
     left = b.select(
         F.col(id_col).alias("vec_a"), F.col(vec_col).alias("va"), "bucket"
     )
@@ -532,6 +525,8 @@ def _topk_by(key, n_ids, take: int):
         return np.lexsort((n_ids, key))[:take]
     cand = np.argpartition(key, take - 1)[:take]
     thr = key[cand].max()
+    if np.isnan(thr):  # fewer than take non-NaN keys: key <= NaN is empty
+        return np.lexsort((n_ids, key))[:take]
     cand = np.flatnonzero(key <= thr)
     return cand[np.lexsort((n_ids[cand], key[cand]))][:take]
 

@@ -131,20 +131,3 @@ def parse_table_cells(pages: DataFrame) -> DataFrame:
         "repeat(concat(' nl ', concat('cell', repeat(' l cell', n_cols - 1))), n_rows - 1)"
     ))
     return parsed.withColumn("otsl", otsl)
-
-
-def rescale_cell_bbox(cells: DataFrame, table_bbox_cols=("tb_l", "tb_t", "tb_r", "tb_b")) -> DataFrame:
-    """0-1000 table-relative cell bbox -> page coords through the table bbox
-    (table_structure_model.py:179-190).  Pure column arithmetic."""
-    tl, tt, tr, tb = (F.col(c) for c in table_bbox_cols)
-    tw = tr - tl
-    th = tb - tt
-    has = F.col("cx1").isNotNull()
-    return cells.withColumns(
-        {
-            "cell_l": F.when(has, tl + F.col("cx1") / 1000.0 * tw),
-            "cell_t": F.when(has, tt + F.col("cy1") / 1000.0 * th),
-            "cell_r": F.when(has, tl + F.col("cx2") / 1000.0 * tw),
-            "cell_b": F.when(has, tt + F.col("cy2") / 1000.0 * th),
-        }
-    )

@@ -66,9 +66,6 @@ def group_col(n_groups: int):
     return F.pmod(h.cast("long"), F.lit(n_groups)).cast("int")
 
 
-_group_col = group_col
-
-
 def read_lineage(spark: SparkSession, lineage_path: str, run_id: str) -> DataFrame | None:
     if not os.path.isdir(lineage_path):
         return None
@@ -93,7 +90,7 @@ def resume_filter(docs: DataFrame, done: set[int], n_groups: int) -> DataFrame:
     join instead."""
     if not done:
         return docs
-    return docs.filter(~_group_col(n_groups).isin(*sorted(done)))
+    return docs.filter(~group_col(n_groups).isin(*sorted(done)))
 
 
 def run_checkpointed_extract(
@@ -127,7 +124,7 @@ def run_checkpointed_extract(
         if group in done:
             continue
         t0 = time.time()
-        group_docs = documents.filter(_group_col(run.n_groups) == group)
+        group_docs = documents.filter(group_col(run.n_groups) == group)
         spans = extract_spans(spark, sf_dir, documents=group_docs, config=config)
         # output first (deterministic per-group dir -> overwrite idempotent)
         group_path = os.path.join(run.out_path, f"group={group}")

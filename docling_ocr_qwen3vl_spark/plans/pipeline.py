@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.page_decode import decode_pages
-from ..operators.spans import assemble_documents, number_spans
+from ..operators.spans import number_spans
 from ..sources.synthetic import synth_raw_pages
 
 
@@ -57,16 +57,6 @@ def extract_spans(
     raw_pages = synth_raw_pages(spark, sf_dir, documents, num_partitions)
     elements = decode_pages(raw_pages, config=config)
     return number_spans(elements)
-
-
-def extract_documents(
-    spark: SparkSession,
-    sf_dir: str,
-    documents: DataFrame | None = None,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Nested Iceberg output shape: (doc_id, spans array<struct<...>>)."""
-    return assemble_documents(extract_spans(spark, sf_dir, documents, num_partitions))
 
 
 def extract_spans_from_interleaved(

@@ -622,18 +622,12 @@ def q_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     contamination).  Each streaming oracle computes its semantics
     declaratively, so both exactly-once store subsystems are
     driver-checked end-to-end."""
-    from .operators.caching import scoped_caches
     from .operators.dedup import dup_components, lsh_candidate_pairs, minhash_signature
 
     docs = _docs_with_mutants(spark, sf_dir)
-    # dup_components checkpoints the edge set eagerly, so the signature
-    # cache lsh_candidate_pairs persisted is fully consumed by the time the
-    # scope closes — without the scope it would outlive this query for the
-    # whole driver run (operators/caching.py)
-    with scoped_caches():
-        comps = dup_components(
-            docs.select("doc_id"), lsh_candidate_pairs(minhash_signature(docs))
-        )
+    comps = dup_components(
+        docs.select("doc_id"), lsh_candidate_pairs(minhash_signature(docs))
+    )
     batch = (
         comps.filter(F.col("doc_id") == F.col("component"))
         .select("doc_id")
@@ -1037,7 +1031,6 @@ def q_lsh_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidate pairs over originals + planted near-dups, from
     BOTH kernels with a kernel key: md5_k8 = the k=8 md5-salt oracle kernel,
     fast_k64 = the k=64/8-band multiply-shift production kernel."""
-    from .operators.caching import scoped_caches
     from .operators.dedup import (
         lsh_candidate_pairs,
         minhash_signature,
@@ -1045,18 +1038,13 @@ def q_lsh_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _docs_with_mutants(spark, sf_dir)
-    # both kernels persist a signature projection; materialize the union
-    # (localCheckpoint) inside the scope so the caches release NOW instead
-    # of accumulating across a 50-query driver run (operators/caching.py)
-    with scoped_caches():
-        k8 = lsh_candidate_pairs(minhash_signature(docs)).withColumn(
-            "kernel", F.lit("md5_k8")
-        )
-        k64 = lsh_candidate_pairs(minhash_signature_fast(docs)).withColumn(
-            "kernel", F.lit("fast_k64")
-        )
-        out = k8.unionByName(k64).localCheckpoint(eager=True)
-    return out
+    k8 = lsh_candidate_pairs(minhash_signature(docs)).withColumn(
+        "kernel", F.lit("md5_k8")
+    )
+    k64 = lsh_candidate_pairs(minhash_signature_fast(docs)).withColumn(
+        "kernel", F.lit("fast_k64")
+    )
+    return k8.unionByName(k64)
 
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1100,17 +1088,11 @@ def q_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         near_duplicate_components,
     )
 
-    from .operators.caching import scoped_caches
-
     docs = _docs_with_mutants(spark, sf_dir)
-    # md5_k8 arm: dup_components checkpoints the edges eagerly, so the
-    # signature cache is consumed before the scope closes; the fast_k64 arm
-    # (near_duplicate_components) scope-releases internally
-    with scoped_caches():
-        pairs = lsh_candidate_pairs(minhash_signature(docs))
-        k8 = dup_components(docs.select("doc_id"), pairs).withColumn(
-            "kernel", F.lit("md5_k8")
-        )
+    pairs = lsh_candidate_pairs(minhash_signature(docs))
+    k8 = dup_components(docs.select("doc_id"), pairs).withColumn(
+        "kernel", F.lit("md5_k8")
+    )
     k64 = near_duplicate_components(
         docs, ExtractConfig(minhash_k=64, minhash_bands=8)
     ).withColumn("kernel", F.lit("fast_k64"))

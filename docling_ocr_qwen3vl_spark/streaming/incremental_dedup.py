@@ -47,6 +47,7 @@ from ..operators.dedup import (
     band_cols,
     dup_components,
     lsh_candidate_pairs,
+    melt_bands,
     minhash_signature_fast,
 )
 from .stream import stream_documents
@@ -59,11 +60,7 @@ STORE_WIDTH_FILE = "_dedup_width.json"
 def melt_band_keys(signatures: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(id, band0..bandN) -> (id, band_key) long form, band index baked
     into the key so band0 collisions never match band1 keys."""
-    bands = band_cols(signatures)
-    return signatures.select(
-        id_col,
-        F.posexplode(F.array(*[F.col(b) for b in bands])).alias("bi", "bk"),
-    ).select(
+    return melt_bands(signatures, id_col).select(
         id_col,
         F.concat(F.col("bi").cast("string"), F.lit(":"), F.col("bk")).alias(
             "band_key"
@@ -382,10 +379,12 @@ def dedup_batch(
     """One micro-batch through in-batch + cross-batch dedup.
 
     Returns (survivors, batch_band_keys).  NOT lazy: the component step
-    runs Spark jobs during this call (dup_components' fixpoint loop), and
-    the signature projection is registered in the shared cache registry —
-    call inside ``scoped_caches()`` (as start_incremental_dedup_stream
-    does) or release via ``release_caches`` once the outputs are written.
+    runs Spark jobs during this call (dup_components' fixpoint loop).  The
+    signature projection is persisted because those jobs and the two
+    output writes are SEPARATE actions (exchange reuse works only inside
+    one plan) — call inside ``scoped_caches()``, as
+    start_incremental_dedup_stream does, so it is released once the
+    outputs are written.
     ``batch_band_keys`` covers EVERY batch doc — survivors and dropped —
     because global-dedup connectivity flows through dropped docs."""
     from pyspark import StorageLevel
@@ -398,13 +397,11 @@ def dedup_batch(
     )
     # one cache boundary right after the UDF: every consumer below (pair
     # join, melt, contamination joins) reads the slim (id, bands)
-    # projection — the signature kernel runs ONCE per batch, and
-    # lsh_candidate_pairs reuses this cache instead of re-persisting
+    # projection, so the signature kernel runs ONCE per batch
     slim = register_cache(
         sigs.select("doc_id", *band_cols(sigs)).persist(
             StorageLevel.MEMORY_AND_DISK
-        ),
-        kind="signatures",
+        )
     )
     pairs = lsh_candidate_pairs(slim)
     all_keys = melt_band_keys(slim)
@@ -585,7 +582,8 @@ def dedup_batch_embeddings(
     property as the text store) — so there precision is what matters and
     the wide key space keeps the conservative drop sound (see
     EMBEDDING_N_PLANES).  Returns (survivors, batch_band_keys); NOT lazy
-    (dup_components runs jobs) and registers caches — call inside
+    (dup_components runs jobs), and the key projections are persisted for
+    the separate actions that follow, as in dedup_batch — call inside
     scoped_caches()."""
     from pyspark import StorageLevel
 
@@ -598,8 +596,7 @@ def dedup_batch_embeddings(
     keys = register_cache(
         embedding_band_keys(batch_df, n_bands, n_planes, dim=dim).persist(
             StorageLevel.MEMORY_AND_DISK
-        ),
-        kind="emb_band_keys",
+        )
     )
     # narrow candidate keys DERIVE from the cached wide keys whenever the
     # geometries nest (narrow band b = planes [b*cand_planes, ...), all
@@ -630,8 +627,7 @@ def dedup_batch_embeddings(
         cand_keys = register_cache(
             embedding_band_keys(
                 batch_df, n_bands, cand_planes, dim=dim
-            ).persist(StorageLevel.MEMORY_AND_DISK),
-            kind="emb_cand_keys",
+            ).persist(StorageLevel.MEMORY_AND_DISK)
         )
     left = cand_keys.select(F.col("doc_id").alias("doc_a"), "band_key")
     right = cand_keys.select(F.col("doc_id").alias("doc_b"), "band_key")

@@ -31,7 +31,7 @@ def test_bench_queries_exist_in_registry():
     bench = _load_bench()
     from docling_ocr_qwen3vl_spark.queries import QUERIES
 
-    for name in bench.BENCH_QUERIES + bench.EAGER_BENCH_QUERIES:
+    for name in bench.BENCH_QUERIES:
         assert name in QUERIES, name
     # the flagship the JSON 'value' field reads must stay in the timed set
     assert "extract_interleaved_spans" in bench.BENCH_QUERIES

@@ -1,17 +1,18 @@
-"""Cache-registry lifecycle: the persisted helper projections operators
-create (signature bands, fast-path buckets) must release once results are
-materialized — across a 50-query driver run or a long-lived serve process
-an unreleased MEMORY_AND_DISK block is a leak the ContextCleaner can never
-reclaim (the registry holds a strong reference)."""
+"""Cache-registry lifecycle: the per-batch projections the streaming dedup
+persists must release when the batch's scope exits — across a long-lived
+stream an unreleased MEMORY_AND_DISK block is a leak the ContextCleaner can
+never reclaim (the registry holds a strong reference).  The batch
+operators persist nothing at all."""
 
 from __future__ import annotations
+
+import threading
 
 from pyspark.sql import functions as F
 
 from docling_ocr_qwen3vl_spark.operators.caching import (
     _LIVE_CACHES,
     register_cache,
-    release_caches,
     scoped_caches,
 )
 
@@ -24,43 +25,41 @@ def _docs(spark, n=30):
     )
 
 
+class _Fake:
+    released = False
+
+    def unpersist(self, blocking=False):
+        self.released = True
+
+
 def test_scoped_caches_releases_only_inner_entries(spark):
-    outer = register_cache(_docs(spark).persist())
     with scoped_caches():
-        inner = register_cache(_docs(spark, 10).persist())
-        inner.count()
-        assert inner.storageLevel.useMemory
-    # inner released, outer untouched
-    assert not inner.storageLevel.useMemory
-    assert [df for _, df, _ in _LIVE_CACHES] == [outer]
-    release_caches()
+        outer = register_cache(_docs(spark).persist())
+        with scoped_caches():
+            inner = register_cache(_docs(spark, 10).persist())
+            inner.count()
+            assert inner.storageLevel.useMemory
+        # inner released, outer untouched
+        assert not inner.storageLevel.useMemory
+        assert [df for df, _ in _LIVE_CACHES] == [outer]
     assert not _LIVE_CACHES and not outer.storageLevel.useMemory
 
 
 def test_scoped_caches_releases_on_error():
-    class Fake:
-        released = False
-
-        def unpersist(self, blocking=False):
-            self.released = True
-
-    import threading
-
-    fake = Fake()
+    fake = _Fake()
     try:
         with scoped_caches():
-            _LIVE_CACHES.append(("generic", fake, threading.get_ident()))
+            register_cache(fake)
             raise RuntimeError("boom")
     except RuntimeError:
         pass
-    assert fake.released and all(df is not fake for _, df, _ in _LIVE_CACHES)
+    assert fake.released and all(df is not fake for df, _ in _LIVE_CACHES)
 
 
-def test_lsh_candidate_pairs_cache_released_by_query_wrapper(spark, tmp_path):
-    """The round-3 leak: q_lsh_dup_pairs persisted two signature
-    projections per call and never released them.  After the wrapper
-    returns (result checkpointed inside its scope) the registry must be
-    back to its pre-call state."""
+def test_lsh_dup_pairs_query_persists_nothing(spark, tmp_path):
+    """The round-3 leak was q_lsh_dup_pairs persisting two signature
+    projections per call.  The query is now cache-free: building and
+    running it registers nothing and its executed plan reads no cache."""
     import __spark_entry__ as entry
 
     docs = _docs(spark)
@@ -72,94 +71,40 @@ def test_lsh_candidate_pairs_cache_released_by_query_wrapper(spark, tmp_path):
     )
     before = len(_LIVE_CACHES)
     out = entry.queries()["lsh_dup_pairs"](spark, sf_dir)
-    assert len(_LIVE_CACHES) == before  # nothing leaked by the build
-    out.count()  # and the checkpointed result is still servable
-    release_caches()
-
-
-def test_bucketed_near_duplicates_fast_registers_releasable_cache(spark):
-    from docling_ocr_qwen3vl_spark.operators.similarity import (
-        bucketed_near_duplicates,
-    )
-
-    emb = spark.range(20).select(
-        F.col("id").alias("vec_id"),
-        F.array(*[(F.col("id") * (k + 1) % 7).cast("double") + 0.1
-                  for k in range(8)]).alias("v"),
-    )
-    before = len(_LIVE_CACHES)
-    with scoped_caches():
-        pairs = bucketed_near_duplicates(emb, fast=True, threshold=0.0)
-        pairs.count()  # materialize inside the scope
-        assert len(_LIVE_CACHES) == before + 1  # fast path registered it
-    assert len(_LIVE_CACHES) == before  # and the scope released it
-
-
-def test_release_by_kind_leaves_other_kinds_live():
-    """release_signature_caches must drain ONLY the signature caches —
-    draining another operator's still-unmaterialized cache would silently
-    reintroduce its N-reference recompute."""
-    from docling_ocr_qwen3vl_spark.operators.dedup import release_signature_caches
-
-    class Fake:
-        def __init__(self):
-            self.released = False
-
-        def unpersist(self, blocking=False):
-            self.released = True
-
-    import threading
-
-    me = threading.get_ident()
-    sig, bucket = Fake(), Fake()
-    _LIVE_CACHES.append(("signatures", sig, me))
-    _LIVE_CACHES.append(("buckets", bucket, me))
-    try:
-        release_signature_caches()
-        assert sig.released and not bucket.released
-        assert any(df is bucket for _, df, _ in _LIVE_CACHES)
-        assert all(df is not sig for _, df, _ in _LIVE_CACHES)
-    finally:
-        release_caches()
-    assert bucket.released and not _LIVE_CACHES
+    out.collect()
+    assert len(_LIVE_CACHES) == before
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in plan
 
 
 def test_scoped_caches_ignores_concurrent_threads_entries():
-    """Two concurrent scopes (streaming foreachBatch workers, the serve
-    worker beside a driver query) must not release each other's caches: a
-    scope exit may only unpersist entries ITS OWN thread registered inside
-    the scope, and must keep (not drop) a concurrent registrant's entry."""
-    import threading
-
-    class Fake:
-        def __init__(self):
-            self.released = False
-
-        def unpersist(self, blocking=False):
-            self.released = True
-
-    mine, theirs = Fake(), Fake()
+    """Two concurrent scopes (two streaming queries' foreachBatch threads)
+    must not release each other's caches: a scope exit may only unpersist
+    entries ITS OWN thread registered inside the scope, and must keep (not
+    drop) a concurrent registrant's entry."""
+    mine, theirs = _Fake(), _Fake()
     registered = threading.Event()
     proceed = threading.Event()
 
     def other_thread():
-        register_cache(theirs, kind="generic")
-        registered.set()
-        proceed.wait(10)
+        with scoped_caches():
+            register_cache(theirs)
+            registered.set()
+            proceed.wait(10)
 
     t = threading.Thread(target=other_thread)
     try:
         with scoped_caches():
-            register_cache(mine, kind="generic")
+            register_cache(mine)
             t.start()
             assert registered.wait(10)
         # my entry released; the concurrent thread's mid-scope entry is
         # neither unpersisted nor dropped from the registry
         assert mine.released
         assert not theirs.released
-        assert any(df is theirs for _, df, _ in _LIVE_CACHES)
+        assert any(df is theirs for df, _ in _LIVE_CACHES)
     finally:
         proceed.set()
         t.join(10)
-        release_caches()
+    assert not t.is_alive()
     assert theirs.released and not _LIVE_CACHES

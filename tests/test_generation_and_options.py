@@ -8,7 +8,6 @@ same approach as test_reference_differential.py.
 from __future__ import annotations
 
 import ast
-from pathlib import Path
 
 import pytest
 
@@ -22,12 +21,11 @@ from docling_ocr_qwen3vl_spark.config import (
 )
 from docling_ocr_qwen3vl_spark.inference import generation as g
 
-REF_OPTIONS = Path("/root/reference/src/docling_ocr_qwen3vl/options.py")
-REF_PROMPTS = Path("/root/reference/src/docling_ocr_qwen3vl/prompts.py")
 
-
-def _extract_reference_normalizer():
-    tree = ast.parse(REF_OPTIONS.read_text())
+@pytest.fixture(scope="module")
+def ref_normalize(requires_reference):
+    ref_options = requires_reference / "options.py"
+    tree = ast.parse(ref_options.read_text())
     nodes = [
         n
         for n in tree.body
@@ -43,14 +41,11 @@ def _extract_reference_normalizer():
     import re as _re
 
     ns = {"re": _re}
-    exec(compile(ast.Module(body=nodes, type_ignores=[]), str(REF_OPTIONS), "exec"), ns)  # noqa: S102
+    exec(compile(ast.Module(body=nodes, type_ignores=[]), str(ref_options), "exec"), ns)  # noqa: S102
     return ns["_normalize_model_repo_id"]
 
 
-REF_NORMALIZE = _extract_reference_normalizer()
-
-
-def test_repo_id_normalizer_differential():
+def test_repo_id_normalizer_differential(ref_normalize):
     cases = [
         "owner/repo",
         " owner/repo ",
@@ -72,11 +67,11 @@ def test_repo_id_normalizer_differential():
         "/x/.cache/huggingface/models--cyankiwi--Qwen3-VL-4B-Thinking-AWQ-4bit",
     ]
     for c in cases:
-        assert normalize_model_repo_id(c) == REF_NORMALIZE(c), repr(c)
+        assert normalize_model_repo_id(c) == ref_normalize(c), repr(c)
 
 
-def test_system_prompt_matches_reference_verbatim():
-    tree = ast.parse(REF_PROMPTS.read_text())
+def test_system_prompt_matches_reference_verbatim(requires_reference):
+    tree = ast.parse((requires_reference / "prompts.py").read_text())
     for node in tree.body:
         if isinstance(node, ast.Assign) and any(
             getattr(t, "id", "") == "QWENVL_HTML_SYSTEM_PROMPT" for t in node.targets

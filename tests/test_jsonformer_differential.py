@@ -20,12 +20,12 @@ import types
 
 import pytest
 
-REF = "/root/reference/src/docling_ocr_qwen3vl/_vlm_jsonformer.py"
-
 
 @pytest.fixture(scope="module")
-def ref_mod():
-    spec = importlib.util.spec_from_file_location("_ref_vlm_jsonformer", REF)
+def ref_mod(requires_reference):
+    spec = importlib.util.spec_from_file_location(
+        "_ref_vlm_jsonformer", requires_reference / "_vlm_jsonformer.py"
+    )
     mod = importlib.util.module_from_spec(spec)
     # the module imports torch lazily inside methods; provide a no-grad stub
     torch = types.ModuleType("torch")

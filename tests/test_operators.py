@@ -276,11 +276,15 @@ def test_minhash_lsh_finds_planted_near_dup(spark):
     pairs = {(r.doc_a, r.doc_b) for r in pairs_df.collect()}
     assert (1, 2) in pairs
     assert all(3 not in p for p in pairs)
-    # the signature projection must sit behind a cache boundary: without it
-    # the banded self-joins re-run the MinHash kernel 2 x n_bands times
-    # (387 s -> 93 s on a 640k-doc sweep)
+    # the MinHash kernel runs ONCE with no cache: the final AQE plan (read
+    # after the action) plans the join's second side as a ReusedExchange
+    # of the first side's band repartition
     plan = pairs_df._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryTableScan" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final
+    assert final.count("ArrowEvalPython") == 1
+    assert "ReusedExchange" in final
+    assert "InMemoryTableScan" not in final
 
 
 def test_simhash_and_jaccard_near_dups(spark):

@@ -36,7 +36,7 @@ ALLOWED_NESTED_LOOP = {"knn_bruteforce": 1, "knn_batch": 4}
 # (driver-loop collects or an eager localCheckpoint), so the sweep would
 # only inspect a checkpoint scan; their REAL repeating/lazy plans are
 # asserted individually below instead
-ITERATIVE = {"ivf_kmeans", "dup_components", "dedup_survivors", "lsh_dup_pairs"}
+ITERATIVE = {"ivf_kmeans", "dup_components", "dedup_survivors"}
 
 
 def _assert_clean(df, name, max_nested_loop=0):
@@ -52,25 +52,62 @@ def test_no_cartesian_anywhere(spark, sf_dir, name):
     _assert_clean(df, name, max_nested_loop=ALLOWED_NESTED_LOOP.get(name, 0))
 
 
+def _final_and_initial(df):
+    """(final, initial) AQE plan strings of ``df``, read after an action."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    final, initial = plan.split("== Initial Plan ==")
+    return final, initial
+
+
 def test_lsh_pair_union_plan_clean(spark, sf_dir):
-    """The lazy two-kernel LSH pair plan (what q_lsh_dup_pairs eagerly
-    checkpoints — the sweep above would only see its checkpoint scan):
-    banded equi-joins only, for BOTH kernels."""
-    from docling_ocr_qwen3vl_spark.operators.caching import scoped_caches
+    """The cache-free self-joins run each kernel ONCE: after the action, the
+    final AQE plan holds the kernel nodes of one join side only — the other
+    side is a ReusedExchange of the shared repartition — and no cache scan.
+    Checked for the two-kernel LSH pair union with broadcast joins and with
+    sort-merge joins, and for the fast bucketed near-dup join."""
     from docling_ocr_qwen3vl_spark.operators.dedup import (
         lsh_candidate_pairs,
         minhash_signature,
         minhash_signature_fast,
     )
+    from docling_ocr_qwen3vl_spark.operators.similarity import (
+        bucketed_near_duplicates,
+    )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(50)
-    with scoped_caches():
-        k8 = lsh_candidate_pairs(minhash_signature(docs))
-        k64 = lsh_candidate_pairs(minhash_signature_fast(docs))
-        union = k8.unionByName(k64)
-        _assert_clean(union, "lsh_pair_union")
-        plan = union._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Join") >= 2  # both kernels' band joins present
+
+    def pair_union():
+        return lsh_candidate_pairs(minhash_signature(docs)).unionByName(
+            lsh_candidate_pairs(minhash_signature_fast(docs))
+        )
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    session_threshold = spark.conf.get(key)
+    for threshold in (session_threshold, "-1"):  # then sort-merge only
+        spark.conf.set(key, threshold)
+        try:
+            union = pair_union()
+            _assert_clean(union, "lsh_pair_union")
+            final, _ = _final_and_initial(union)
+        finally:
+            spark.conf.set(key, session_threshold)
+        join = "SortMergeJoin" if threshold == "-1" else "BroadcastHashJoin"
+        assert final.count(join) == 2, (threshold, final)  # one per kernel
+        assert final.count("ArrowEvalPython") == 2  # one per kernel
+        assert final.count("ReusedExchange") >= 2
+        assert "InMemoryTableScan" not in final
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(50).select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
+    buckets = bucketed_near_duplicates(emb, threshold=0.0, fast=True)
+    _assert_clean(buckets, "bucketed_near_duplicates")
+    final, initial = _final_and_initial(buckets)
+    assert 2 * final.count("bucket_udf(") == initial.count("bucket_udf(") > 0
+    assert "ReusedExchange" in final
+    assert "InMemoryTableScan" not in final
 
 
 def test_propagation_round_plan_clean(spark):

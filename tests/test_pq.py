@@ -439,3 +439,19 @@ def test_ivf_knn_trained_centroids_kernels_agree(spark, sf_dir):
     expr = rows(False)
     fast = rows(True)
     assert expr == fast and len(expr) == 30
+
+
+def test_topk_by_mostly_nan_key_matches_lexsort():
+    """With fewer than ``take`` non-NaN keys the argpartition threshold is
+    NaN; _topk_by must still return its documented
+    np.lexsort((n_ids, key))[:take] — all ``take`` indices — or the ADC
+    cogroup's per-query output arrays fall out of step."""
+    from docling_ocr_qwen3vl_spark.operators.similarity import _topk_by
+
+    key = np.full(20, np.nan)
+    key[[3, 7, 11, 15]] = [0.5, 0.1, 0.5, -2.0]
+    n_ids = np.arange(120, 100, -1)
+    for take in (3, 4, 5, 12):
+        np.testing.assert_array_equal(
+            _topk_by(key, n_ids, take), np.lexsort((n_ids, key))[:take]
+        )

@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import ast
 import random
-from pathlib import Path
 
 import pytest
 from hypothesis import given, settings
@@ -23,13 +22,11 @@ from hypothesis import strategies as st
 from docling_ocr_qwen3vl_spark.semantics.html_parse import parse_qwenvl_html
 from docling_ocr_qwen3vl_spark.semantics.text import split_paragraphs
 
-REF = Path("/root/reference/src/docling_ocr_qwen3vl/qwen_runner.py")
-
-
-def _extract_reference_functions():
-    """Exec only the self-contained defs we need, with their real deps."""
-    source = REF.read_text()
-    tree = ast.parse(source)
+def reference_functions(src):
+    """(parse, split): exec only the self-contained defs we need from the
+    reference source directory ``src``, with their real deps."""
+    ref = src / "qwen_runner.py"
+    tree = ast.parse(ref.read_text())
     wanted = {"HtmlElement", "_parse_qwenvl_html", "_split_paragraphs"}
     nodes = [
         n
@@ -43,11 +40,23 @@ def _extract_reference_functions():
     from dataclasses import field as _field
 
     ns = {"re": _re, "dataclass": _dc, "field": _field, "tuple": tuple}
-    exec(compile(module, str(REF), "exec"), ns)  # noqa: S102 - test-only
+    exec(compile(module, str(ref), "exec"), ns)  # noqa: S102 - test-only
     return ns["_parse_qwenvl_html"], ns["_split_paragraphs"]
 
 
-REF_PARSE, REF_SPLIT = _extract_reference_functions()
+@pytest.fixture(scope="module")
+def ref_fns(requires_reference):
+    return reference_functions(requires_reference)
+
+
+@pytest.fixture(scope="module")
+def ref_parse(ref_fns):
+    return ref_fns[0]
+
+
+@pytest.fixture(scope="module")
+def ref_split(ref_fns):
+    return ref_fns[1]
 
 
 def _as_tuples(elements):
@@ -72,14 +81,14 @@ FRAGMENTS = [
 ]
 
 
-def test_html_parse_differential_fragment_soup():
+def test_html_parse_differential_fragment_soup(ref_parse):
     rng = random.Random(20260816)
     for _ in range(20000):
         s = "".join(rng.choices(FRAGMENTS, k=rng.randint(0, 10)))
-        assert _as_tuples(parse_qwenvl_html(s)) == _as_tuples(REF_PARSE(s)), repr(s)
+        assert _as_tuples(parse_qwenvl_html(s)) == _as_tuples(ref_parse(s)), repr(s)
 
 
-def test_html_parse_differential_known_quirks():
+def test_html_parse_differential_known_quirks(ref_parse):
     cases = [
         "",
         "   ",
@@ -101,7 +110,7 @@ def test_html_parse_differential_known_quirks():
         "<div>a<p>b</p>c</div>",                        # p replaces div
     ]
     for s in cases:
-        assert _as_tuples(parse_qwenvl_html(s)) == _as_tuples(REF_PARSE(s)), repr(s)
+        assert _as_tuples(parse_qwenvl_html(s)) == _as_tuples(ref_parse(s)), repr(s)
 
 
 @settings(max_examples=300, deadline=None)
@@ -110,8 +119,8 @@ def test_html_parse_differential_known_quirks():
         "".join
     )
 )
-def test_html_parse_differential_hypothesis(s):
-    assert _as_tuples(parse_qwenvl_html(s)) == _as_tuples(REF_PARSE(s))
+def test_html_parse_differential_hypothesis(ref_parse, s):
+    assert _as_tuples(parse_qwenvl_html(s)) == _as_tuples(ref_parse(s))
 
 
 # ---------------------------------------------------------- paragraph split
@@ -119,17 +128,17 @@ PARA_PIECES = ["a", "bb", "  ", "\n", "\n\n", "\r\n", "\r", "\t", "\x0b",
                "\x0c", "word ", ".", "\n \n", "\n\t\n", "\x85", " "]
 
 
-def test_split_paragraphs_differential_soup():
+def test_split_paragraphs_differential_soup(ref_split):
     rng = random.Random(99)
     for _ in range(20000):
         s = "".join(rng.choices(PARA_PIECES, k=rng.randint(0, 12)))
-        assert split_paragraphs(s) == REF_SPLIT(s), repr(s)
+        assert split_paragraphs(s) == ref_split(s), repr(s)
 
 
 @settings(max_examples=300, deadline=None)
 @given(st.text(alphabet="ab \n\r\t\x0b\x0c\x85 .", max_size=40))
-def test_split_paragraphs_differential_hypothesis(s):
-    assert split_paragraphs(s) == REF_SPLIT(s)
+def test_split_paragraphs_differential_hypothesis(ref_split, s):
+    assert split_paragraphs(s) == ref_split(s)
 
 
 @pytest.mark.parametrize(
@@ -137,5 +146,5 @@ def test_split_paragraphs_differential_hypothesis(s):
     ["", "x", "a\n\nb", "a\nb", "a\rb", "  \n\n  ", "one\n\n\n\ntwo",
      "a\n \nb", "a\x0bb", " lead", "e\x85f", "a\r\n\r\nb\rc"],
 )
-def test_split_paragraphs_differential_pinned(s):
-    assert split_paragraphs(s) == REF_SPLIT(s)
+def test_split_paragraphs_differential_pinned(ref_split, s):
+    assert split_paragraphs(s) == ref_split(s)

@@ -8,8 +8,8 @@ from __future__ import annotations
 import ast
 import logging
 import random
-from pathlib import Path
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -22,7 +22,6 @@ from docling_ocr_qwen3vl_spark.semantics.json_repair import (
     repair_json_object,
 )
 
-REF = Path("/root/reference/src/docling_ocr_qwen3vl/_vlm_jsonformer.py")
 WANTED = {
     "_fix_corrupted_keys",
     "_repair_json_array",
@@ -33,8 +32,12 @@ WANTED = {
 }
 
 
-def _extract():
-    tree = ast.parse(REF.read_text())
+@pytest.fixture(scope="module")
+def pairs(requires_reference):
+    """(mine, reference) function pairs, the reference defs exec'd from
+    its source."""
+    ref = requires_reference / "_vlm_jsonformer.py"
+    tree = ast.parse(ref.read_text())
     nodes = [
         n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name in WANTED
     ]
@@ -43,20 +46,16 @@ def _extract():
     import re as _re
 
     ns = {"re": _re, "json": _json, "_log": logging.getLogger("ref-test")}
-    exec(compile(ast.Module(body=nodes, type_ignores=[]), str(REF), "exec"), ns)  # noqa: S102
-    return ns
+    exec(compile(ast.Module(body=nodes, type_ignores=[]), str(ref), "exec"), ns)  # noqa: S102
+    return [
+        (fix_corrupted_keys, ns["_fix_corrupted_keys"]),
+        (repair_json_array, ns["_repair_json_array"]),
+        (repair_json_object, ns["_repair_json_object"]),
+        (extract_valid_elements, ns["_extract_valid_elements"]),
+        (parse_array, ns["_parse_array"]),
+        (parse_object, ns["_parse_object"]),
+    ]
 
-
-NS = _extract()
-
-PAIRS = [
-    (fix_corrupted_keys, NS["_fix_corrupted_keys"]),
-    (repair_json_array, NS["_repair_json_array"]),
-    (repair_json_object, NS["_repair_json_object"]),
-    (extract_valid_elements, NS["_extract_valid_elements"]),
-    (parse_array, NS["_parse_array"]),
-    (parse_object, NS["_parse_object"]),
-]
 
 FRAGMENTS = [
     '{"a":1}', '[{"x":2},{"y":3}]', '"y1:890', '"k":', "[", "]", "{", "}",
@@ -68,16 +67,16 @@ FRAGMENTS = [
 ]
 
 
-def test_json_repair_differential_soup():
+def test_json_repair_differential_soup(pairs):
     rng = random.Random(424242)
     for _ in range(8000):
         s = "".join(rng.choices(FRAGMENTS, k=rng.randint(0, 6)))
-        for mine, ref in PAIRS:
+        for mine, ref in pairs:
             assert mine(s) == ref(s), (mine.__name__, repr(s))
 
 
 @settings(max_examples=300, deadline=None)
 @given(st.lists(st.sampled_from(FRAGMENTS) | st.text(max_size=10), max_size=8).map("".join))
-def test_json_repair_differential_hypothesis(s):
-    for mine, ref in PAIRS:
+def test_json_repair_differential_hypothesis(pairs, s):
+    for mine, ref in pairs:
         assert mine(s) == ref(s), (mine.__name__, repr(s))

@@ -10,10 +10,11 @@ from pyspark.sql import functions as F
 
 from docling_ocr_qwen3vl_spark.operators.html_elements import parse_html_elements
 from docling_ocr_qwen3vl_spark.sources.synthetic import synth_raw_pages
-from tests.test_reference_differential import REF_PARSE
+from tests.test_reference_differential import reference_functions
 
 
-def test_spark_html_elements_equal_reference_on_corpus(spark, sf_dir):
+def test_spark_html_elements_equal_reference_on_corpus(spark, sf_dir, requires_reference):
+    ref_parse, _ = reference_functions(requires_reference)
     pages = synth_raw_pages(spark, sf_dir).filter(
         F.col("payload_kind") == "qwenvl_html"
     )
@@ -34,7 +35,7 @@ def test_spark_html_elements_equal_reference_on_corpus(spark, sf_dir):
     for key, payload in payloads.items():
         want = [
             (i, e.tag, e.text, e.bbox, e.element_type)
-            for i, e in enumerate(REF_PARSE(payload))
+            for i, e in enumerate(ref_parse(payload))
         ]
         assert sorted(got.get(key, [])) == want, key
         n_variants.add(int(key[0]) % 16)
