@@ -1,13 +1,17 @@
 """docling_ocr_qwen3vl_spark — a from-scratch PySpark-native rebuild of the
 per-document extraction capabilities of mayflower/docling-ocr-qwen3vl.
 
-Top-level API (the Spark analog of the reference's plugin surface,
-plugins.py:8-71 + DocumentConverter.convert):
+Top-level API (the Spark analog of the reference's
+``DocumentConverter.convert``; the plugin factories live in ``api.py``):
 
     from docling_ocr_qwen3vl_spark import ExtractConfig, extract
 
     spans = extract(spark, documents_df)           # flat span rows
     docs  = extract(spark, documents_df, nested=True)  # (doc_id, spans[])
+
+``extract`` is the one extraction plan, ``plans/pipeline.extract_spans``,
+which honours the whole ``ExtractConfig`` (decode backend, stage enables,
+``num_partitions``).
 
 Stage-level operators live under ``operators/`` (each independently
 callable — they are the ``queries()`` entries in __spark_entry__.py);
@@ -39,12 +43,14 @@ def extract(
     documents: DataFrame,
     config: ExtractConfig | None = None,
     nested: bool = False,
-    sf_dir: str = "",
 ) -> DataFrame:
-    """documents (doc_id, text, ...) -> interleaved text+media spans.
+    """documents (doc_id, text, ...) -> interleaved spans under ``config``.
 
-    Honors the per-stage enables in ``config`` as PLAN predicates — a
-    disabled stage's pages never enter the decode pass (see api.py)."""
-    from .api import extract as _extract
+    ``nested=False`` returns the flat (doc_id, offset, kind, text,
+    media_ref) table; ``nested=True`` the (doc_id, spans[]) document shape
+    (BASELINE input_hint)."""
+    from .operators.spans import assemble_documents
+    from .plans.pipeline import extract_spans
 
-    return _extract(spark, documents, config, sf_dir, nested)
+    spans = extract_spans(spark, "", documents=documents, config=config)
+    return assemble_documents(spans) if nested else spans

@@ -1,53 +1,9 @@
-"""Top-level API — the analog of ``DocumentConverter.convert`` and the
-plugin factory surface (SURVEY.md §2.6, reference plugins.py:8-71).
+"""Plugin factory surface (SURVEY.md §2.6, reference plugins.py:8-71).
 
-``extract(spark, documents, config)`` is the one-call entry; per-stage
-enables in ``ExtractConfig`` become PLAN predicates — a disabled stage's
-pages are filtered out before the decode pass, so Catalyst never schedules
-their work (the Spark analog of not registering a plugin).
+The one-call entry, the analog of ``DocumentConverter.convert``, is the
+package's ``extract`` (``plans/pipeline.extract_spans``); its stage enables
+are ``ExtractConfig.do_ocr``/``do_layout``/``do_tables``.
 """
-
-from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from .config import ExtractConfig
-from .operators.page_decode import decode_pages
-from .operators.spans import assemble_documents, number_spans
-from .sources.synthetic import synth_raw_pages
-
-# payload kinds gated by each stage enable (config.py ExtractConfig)
-_STAGE_KINDS = {
-    "do_ocr": ("qwenvl_html", "plain_text"),
-    "do_layout": ("layout_json",),
-    "do_tables": ("table_json",),
-}
-
-
-def extract(
-    spark: SparkSession,
-    documents: DataFrame | None = None,
-    config: ExtractConfig | None = None,
-    sf_dir: str = "",
-    nested: bool = False,
-) -> DataFrame:
-    """documents -> interleaved spans under ``config``.
-
-    ``nested=False`` returns the flat (doc_id, offset, kind, text,
-    media_ref) table; ``nested=True`` the (doc_id, spans[]) document shape
-    (BASELINE input_hint)."""
-    cfg = config or ExtractConfig()
-    pages = synth_raw_pages(spark, sf_dir, documents, cfg.num_partitions)
-    enabled: list[str] = []
-    for flag, kinds in _STAGE_KINDS.items():
-        if getattr(cfg, flag):
-            enabled.extend(kinds)
-    if len(enabled) < sum(len(k) for k in _STAGE_KINDS.values()):
-        pages = pages.filter(F.col("payload_kind").isin(*enabled))
-    spans = number_spans(decode_pages(pages, config=cfg))
-    return assemble_documents(spans) if nested else spans
-
 
 # --------------------------------------------------------------------------
 # Plugin factories (reference plugins.py:8-71): each returns the engines the

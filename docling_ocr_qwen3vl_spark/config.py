@@ -5,8 +5,8 @@ The reference configures six Pydantic option classes keyed by ``kind``
 qwen3vl_classifier / qwen3vl_code_formula), each carrying model/device/
 sampling knobs plus per-stage enables.  On Spark the model knobs collapse
 into the decoder backend (broadcast as plain config to executors) and the
-per-stage enables become cheap plan predicates (an disabled stage is simply
-not added to the plan — Catalyst never sees it).
+per-stage enables become one plan predicate: a disabled stage's page kinds
+are filtered out before the decode pass, so their pages are never decoded.
 
 Prompt resolution (prompts.py:49-55): per-mode default with override-dict
 lookup — kept verbatim so a production Qwen decoder receives identical
@@ -120,14 +120,13 @@ class ExtractConfig:
     # spark-submit deployment select int4/int8 quantization or a different
     # model repo without constructing stage options by hand (DEPLOY.md)
     decoder_options: dict = field(default_factory=dict)
-    # per-stage enables (plugins' enabled flags / do_*_enrichment options)
+    # per-stage enables (plugins' enabled flags): a disabled stage's pages
+    # are filtered out before the decode pass (STAGE_PAYLOAD_KINDS)
     do_ocr: bool = True
     do_layout: bool = True
     do_tables: bool = True
-    do_picture_classes: bool = False
-    do_code_formula: bool = False
-    # scale knobs
-    num_partitions: int | None = None  # None -> defaultParallelism * 2
+    # decode-stage width (page repartition); None -> defaultParallelism
+    num_partitions: int | None = None
     # (checkpoint group count lives on CheckpointedRun / submit_job — the
     # single source of truth; a duplicate knob here was dead and misleading)
     # near-dup sweep knobs, consumed by operators.dedup.
@@ -148,6 +147,14 @@ class ExtractConfig:
 
     def prompt(self) -> str:
         return resolve_prompt(self.prompt_mode, self.prompt_overrides)
+
+
+# page payload kinds gated by each ExtractConfig stage enable
+STAGE_PAYLOAD_KINDS: dict[str, tuple[str, ...]] = {
+    "do_ocr": ("qwenvl_html", "plain_text"),
+    "do_layout": ("layout_json",),
+    "do_tables": ("table_json",),
+}
 
 
 # --------------------------------------------------------------------------

@@ -36,7 +36,7 @@ import os
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 LINEAGE_COLUMNS = (
@@ -126,31 +126,31 @@ def run_checkpointed_extract(
         t0 = time.time()
         group_docs = documents.filter(group_col(run.n_groups) == group)
         spans = extract_spans(spark, sf_dir, documents=group_docs, config=config)
-        # output first (deterministic per-group dir -> overwrite idempotent)
+        # output first (deterministic per-group dir -> overwrite idempotent);
+        # the stats ride on the write as observed metrics, so neither the
+        # plan nor the written parquet is read a second time.  (doc_id,
+        # offset) is unique (row_number), so count(*) is the span count and
+        # the offset-0 rows are the documents.
+        observed = Observation()
         group_path = os.path.join(run.out_path, f"group={group}")
-        spans.write.mode("overwrite").parquet(group_path)
-        # stats from the JUST-WRITTEN parquet: re-running the extraction
-        # plan for the aggregate would double the decode cost per group
-        stats = (
-            spark.read.parquet(group_path)
-            .agg(
-                F.countDistinct("doc_id").alias("n_docs"),
-                F.countDistinct("doc_id", "offset").alias("n_spans"),
-                F.min(F.col("doc_id").cast("long")).alias("dmin"),
-                F.max(F.col("doc_id").cast("long")).alias("dmax"),
-            )
-            .collect()
-        )[0]
+        spans.observe(
+            observed,
+            F.count(F.lit(1)).alias("n_spans"),
+            F.count_if(F.col("offset") == 0).alias("n_docs"),
+            F.min(F.col("doc_id").cast("long")).alias("dmin"),
+            F.max(F.col("doc_id").cast("long")).alias("dmax"),
+        ).write.mode("overwrite").parquet(group_path)
+        stats = observed.get
         # lineage LAST, from the driver only
         spark.createDataFrame(
             [
                 (
                     run.run_id,
                     group,
-                    str(stats.dmin),
-                    str(stats.dmax),
-                    int(stats.n_docs),
-                    int(stats.n_spans),
+                    str(stats["dmin"]),
+                    str(stats["dmax"]),
+                    int(stats["n_docs"]),
+                    int(stats["n_spans"]),
                     int((time.time() - t0) * 1000),
                     time.strftime("%Y-%m-%dT%H:%M:%S"),
                 )

@@ -1,4 +1,12 @@
-"""End-to-end extraction plan: documents -> interleaved spans.
+"""The extraction plan: documents -> interleaved spans.
+
+``extract_spans`` is the one plan for the synthetic page source (the
+checkpointed run, the job/HTTP surface, the streams, the queries and the
+package's ``extract`` all build on it); ``extract_spans_from_interleaved``
+is the same plan over the (doc_id, spans[]) input shape.  Both honour the
+whole ``ExtractConfig``: the decode backend and its knobs, the stage
+enables (a disabled stage's page kinds are filtered out before the decode
+pass) and ``num_partitions`` (the width of the page repartition).
 
 Lifecycle (SURVEY.md §3.1 Spark equivalent):
 
@@ -20,33 +28,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..config import STAGE_PAYLOAD_KINDS, ExtractConfig
 from ..operators.page_decode import decode_pages
+from ..operators.partitioning import repartition_pages
 from ..operators.spans import number_spans
 from ..sources.synthetic import synth_raw_pages
 
 
-def repartition_pages(
-    raw_pages: DataFrame, spark: SparkSession, num_partitions: int | None = None
-) -> DataFrame:
-    """Salted page-level repartition (north_rule skew defusal).
-
-    Hash on (doc_id, page_no) — not doc_id alone — so documents with many
-    pages spread across tasks.  Always pass an EXPLICIT count: the decode
-    stage is CPU-bound, and AQE's size-based coalescing would serialize it
-    on small byte volumes.  1x parallelism (see synth_raw_pages): each
-    extra Python task costs ~9 ms of serialized launch overhead.
-    """
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
-    return raw_pages.repartition(num_partitions, F.xxhash64("doc_id", "page_no"))
+def _enabled_pages(raw_pages: DataFrame, cfg: ExtractConfig) -> DataFrame:
+    """Drop the pages of disabled stages; with every stage on, no filter."""
+    disabled = [
+        kind
+        for flag, kinds in STAGE_PAYLOAD_KINDS.items()
+        if not getattr(cfg, flag)
+        for kind in kinds
+    ]
+    if not disabled:
+        return raw_pages
+    return raw_pages.filter(~F.col("payload_kind").isin(*disabled))
 
 
 def extract_spans(
     spark: SparkSession,
     sf_dir: str,
     documents: DataFrame | None = None,
-    num_partitions: int | None = None,
-    config=None,
+    config: ExtractConfig | None = None,
 ) -> DataFrame:
     """Flat span table: (doc_id, offset, kind, text, media_ref).
 
@@ -54,16 +60,15 @@ def extract_spans(
     the decode stage consumes it directly — exactly ONE shuffle before the
     Python pass, one more for the offset window.
     """
-    raw_pages = synth_raw_pages(spark, sf_dir, documents, num_partitions)
-    elements = decode_pages(raw_pages, config=config)
-    return number_spans(elements)
+    cfg = config or ExtractConfig()
+    raw_pages = synth_raw_pages(spark, sf_dir, documents, cfg.num_partitions)
+    return number_spans(decode_pages(_enabled_pages(raw_pages, cfg), config=cfg))
 
 
 def extract_spans_from_interleaved(
     spark: SparkSession,
     interleaved: DataFrame,
-    num_partitions: int | None = None,
-    config=None,
+    config: ExtractConfig | None = None,
 ) -> DataFrame:
     """BASELINE.json input_hint path: the INPUT is itself an interleaved
     (doc_id, spans[]) table whose raw_html/raw_text spans carry payloads and
@@ -73,15 +78,13 @@ def extract_spans_from_interleaved(
     raw payload spans ONLY (media spans never enter Python — a filter +
     projection keeps them JVM-side with their identity preserved) -> union
     -> one reading-order window.  Same two-shuffle budget as extract_spans.
+    The stage enables gate the raw payload spans (``do_ocr`` gates
+    raw_html/raw_text); media passthrough is always kept.
     """
     from ..sources.interleaved import RAW_TEXT_KINDS, explode_interleaved
 
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
-
-    rows = explode_interleaved(interleaved).repartition(
-        num_partitions, F.xxhash64("doc_id", "in_offset")
-    )
+    cfg = config or ExtractConfig()
+    rows = repartition_pages(explode_interleaved(interleaved), cfg.num_partitions)
 
     payload_kind = F.coalesce(
         *[
@@ -90,16 +93,13 @@ def extract_spans_from_interleaved(
         ]
     )
     raw_pages = rows.filter(F.col("in_kind").isin(*RAW_TEXT_KINDS)).select(
-        "doc_id",
-        F.col("in_offset").alias("page_no"),
-        payload_kind.alias("payload_kind"),
-        "payload",
+        "doc_id", "page_no", payload_kind.alias("payload_kind"), "payload"
     )
-    decoded = decode_pages(raw_pages, config=config)
+    decoded = decode_pages(_enabled_pages(raw_pages, cfg), config=cfg)
 
     media_rows = rows.filter(F.col("in_kind") == "media").select(
         "doc_id",
-        F.col("in_offset").alias("page_no"),
+        "page_no",
         F.lit(0).cast("int").alias("seq"),
         F.lit("media_ref").alias("kind"),
         F.lit("").alias("text"),

@@ -41,7 +41,9 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlsplit
 
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 
+from ..plans.checkpoint import read_lineage
 from ..plans.jobs import PENDING, SUCCESS, ExtractJob, advance_job, load_job, poll_job, submit_job
 
 _TASK_RE = re.compile(r"^/v1/(status/poll|result)/([0-9a-f]{12})$")
@@ -53,9 +55,6 @@ MAX_GROUPS = 4096
 # one knob that keeps a result fetch bounded regardless of corpus size
 DEFAULT_RESULT_LIMIT = 1000
 MAX_RESULT_LIMIT = 10_000
-# total-span-count cache bound: a long-lived serve process must not grow
-# driver state per task forever (tasks outlive their clients)
-MAX_RESULT_COUNT_CACHE = 1024
 
 
 def encode_cursor(doc_id, offset) -> str:
@@ -97,8 +96,6 @@ def result_page(out, after: tuple | None, limit: int):
     pushdown-able range predicate and orderBy+limit compiles to a top-K
     (TakeOrderedAndProject) — O(page) work per request with no OFFSET skip
     and no global sort, which is what keeps page N as cheap as page 0."""
-    from pyspark.sql import functions as F
-
     # 'group' is checkpoint bookkeeping (the resume key), not a span field
     page = out.drop("group")
     if after is not None:
@@ -124,28 +121,8 @@ class ServeContext:
         self.tasks: queue.Queue[str] = queue.Queue()
         self.failures: dict[str, str] = {}
         self._attempt_failures: dict[str, int] = {}
-        # task_id -> total span count, filled on the first result fetch so
-        # a client draining N pages costs ONE count job, not N (the output
-        # of a finished job is immutable, so the cache never goes stale)
-        self.result_counts: dict[str, int] = {}
-        self._counts_lock = threading.Lock()
         self._stop = threading.Event()
         self.worker = threading.Thread(target=self._work, daemon=True)
-
-    def total_spans(self, task_id: str, out) -> int:
-        with self._counts_lock:
-            cached = self.result_counts.get(task_id)
-        if cached is not None:
-            return cached
-        n = out.count()
-        with self._counts_lock:
-            self.result_counts[task_id] = n
-            # bounded: evict oldest entries so a long-lived server's
-            # per-task state cannot grow without limit (a finished job's
-            # count is cheap to recompute if its client comes back)
-            while len(self.result_counts) > MAX_RESULT_COUNT_CACHE:
-                self.result_counts.pop(next(iter(self.result_counts)))
-        return n
 
     def start(self) -> None:
         self._resume_inflight()
@@ -304,6 +281,10 @@ class _Handler(BaseHTTPRequestHandler):
             if not numeric:
                 after = (str(after[0]), after[1])
         rows = result_page(out, after, page_limit).collect()
+        # the total is the lineage's durable per-group n_spans, one row per
+        # group: front ends sharing a root may both commit the same group
+        lineage = read_lineage(self.ctx.spark, job.run.lineage_path, job.run.run_id)
+        n_spans = lineage.dropDuplicates(["partition_id"]).agg(F.sum("n_spans")).first()[0]
         # a short page proves the result is drained; a full page may have
         # more, so hand back the cursor for the next fetch
         next_cursor = (
@@ -315,7 +296,7 @@ class _Handler(BaseHTTPRequestHandler):
             200,
             {
                 "task_id": task_id,
-                "n_spans": self.ctx.total_spans(task_id, out),
+                "n_spans": n_spans,
                 "limit": page_limit,
                 "returned": len(rows),
                 "next_cursor": next_cursor,

@@ -23,18 +23,18 @@ RAW_TEXT_KINDS = {"raw_html": "qwenvl_html", "raw_text": "plain_text"}
 
 
 def explode_interleaved(docs: DataFrame) -> DataFrame:
-    """(doc_id, spans[]) -> (doc_id, in_offset, in_kind, payload, media_ref).
+    """(doc_id, spans[]) -> (doc_id, page_no, in_kind, payload, media_ref_in).
 
-    Rows arrive sorted per document by the input span offset downstream via
-    the offset column; no shuffle here (generator only).
+    The input span offset becomes ``page_no``: it orders the rows
+    downstream exactly as a synthetic page number does.  No shuffle here
+    (generator only).
     """
-    exploded = docs.select(
+    return docs.select(
         "doc_id", F.explode("spans").alias("s")
     ).select(
         "doc_id",
-        F.col("s.offset").cast("int").alias("in_offset"),
+        F.col("s.offset").cast("int").alias("page_no"),
         F.col("s.kind").alias("in_kind"),
         F.col("s.text").alias("payload"),
         F.coalesce(F.col("s.media_ref"), F.lit("")).alias("media_ref_in"),
     )
-    return exploded

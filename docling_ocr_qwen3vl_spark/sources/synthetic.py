@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text_fns import words
+from ..operators.partitioning import repartition_pages
 
 # Page-count / kind cycle (kept tiny and prime-ish so all combinations occur).
 N_PAGES_MOD = 3  # n_pages = doc_id % 3 + 1
@@ -174,26 +175,14 @@ def synth_raw_pages(
 ) -> DataFrame:
     """documents parquet -> (doc_id, page_no, payload_kind, payload, page_width, page_height).
 
-    Project words once, explode a 0..n_pages-1 sequence (generator), then a
-    salted PAGE-level repartition **before** payload construction so the
-    wide string work and everything downstream runs at full parallelism —
-    a small parquet input otherwise arrives as one partition and the whole
-    build would serialize.  Explicit partition count: AQE's size-based
-    coalescing is wrong for CPU-bound stages (it would squash this to a
-    handful of tasks because text bytes are small).
+    Project words once, explode a 0..n_pages-1 sequence (generator), then
+    the salted page repartition (``repartition_pages``) **before** payload
+    construction so the wide string work and everything downstream runs at
+    full parallelism: a small parquet input otherwise arrives as one
+    partition and the whole build would serialize.
     """
     if documents is None:
         documents = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    if num_partitions is None:
-        # 1x parallelism, not 2x: every partition of the downstream decode
-        # stage is a Python task, and each Python task carries a measured
-        # ~9 ms of serialized launch overhead (round 6, local[32]: an
-        # identity mapInPandas over 10k rows costs 0.23 s at 1 task,
-        # 0.66 s at 64, 1.24 s at 128 — linear in task count).  The page
-        # salt spreads work uniformly, so the 2x headroom bought nothing
-        # while doubling that fixed cost; clusters that want finer task
-        # granularity for skew pass num_partitions explicitly.
-        num_partitions = spark.sparkContext.defaultParallelism
 
     doc = F.col("doc_id")
     base = documents.select(
@@ -202,14 +191,14 @@ def synth_raw_pages(
         words(F.col("text")).alias("ws"),
     )
 
-    pages = base.select(
-        "doc_id",
-        "doc_num",
-        "ws",
-        F.explode(F.sequence(F.lit(0), (F.col("doc_num") % N_PAGES_MOD).cast("int"))).alias(
-            "page_no"
+    last_page = (F.col("doc_num") % N_PAGES_MOD).cast("int")
+    pages = repartition_pages(
+        base.select(
+            "doc_id", "doc_num", "ws",
+            F.explode(F.sequence(F.lit(0), last_page)).alias("page_no"),
         ),
-    ).repartition(num_partitions, F.xxhash64("doc_id", "page_no"))
+        num_partitions,
+    )
 
     kind_idx = ((F.col("doc_num") + F.col("page_no")) % 4).cast("int")
     dnum = F.col("doc_num")

@@ -83,9 +83,16 @@ def test_extract_stage_enables_are_plan_predicates(spark, sf_dir):
     from collections import Counter
     kinds = Counter(r.kind for r in slim_rows)
     assert kinds["text"] > 0
-    # plan predicate: the payload-kind filter reaches the plan
-    plan = slim._jdf.queryExecution().executedPlan().toString()
-    assert "payload_kind" in plan
+    # plan predicate: the payload-kind filter sits right below the page
+    # repartition, so disabled pages are neither shuffled nor decoded; with
+    # every stage on there is no filter at all
+    def page_exchange_child(df):
+        lines = df._jdf.queryExecution().optimizedPlan().toString().splitlines()
+        (at,) = [i for i, line in enumerate(lines) if "RepartitionByExpression" in line]
+        return lines[at + 1].strip()
+
+    assert page_exchange_child(slim).startswith("+- Filter ")
+    assert page_exchange_child(full).startswith("+- Generate ")
 
 
 def test_plugin_factories_mirror_reference_surface():

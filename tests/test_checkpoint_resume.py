@@ -1,8 +1,12 @@
 """S6 resume protocol: a killed run resumes without re-processing and the
 final table equals the single-shot result (north_rule requirement)."""
 
-import pytest
+import os
 
+import pytest
+from pyspark.sql import functions as F
+
+from docling_ocr_qwen3vl_spark import ExtractConfig, extract
 from docling_ocr_qwen3vl_spark.plans.checkpoint import (
     CheckpointedRun,
     completed_groups,
@@ -40,6 +44,22 @@ def test_kill_and_resume_produces_identical_table(spark, sf_dir, tmp_path):
     per_group = {r.partition_id: r for r in lineage.collect()}
     assert sorted(per_group) == list(range(run.n_groups))
     assert lineage.count() == run.n_groups
+    # each lineage row's stats are those of its group's written output
+    for group, row in per_group.items():
+        want = (
+            spark.read.parquet(os.path.join(run.out_path, f"group={group}"))
+            .agg(
+                F.countDistinct("doc_id").alias("n_docs"),
+                F.countDistinct("doc_id", "offset").alias("n_spans"),
+                F.min(F.col("doc_id").cast("long")).alias("dmin"),
+                F.max(F.col("doc_id").cast("long")).alias("dmax"),
+            )
+            .first()
+        )
+        assert want.n_spans > 0
+        assert (row.n_docs, row.n_spans, row.doc_id_min, row.doc_id_max) == (
+            want.n_docs, want.n_spans, str(want.dmin), str(want.dmax)
+        )
 
     # final table identical to a single-shot run
     resumed = spark.read.parquet(run.out_path)
@@ -48,3 +68,23 @@ def test_kill_and_resume_produces_identical_table(spark, sf_dir, tmp_path):
 
     # idempotence: running again processes nothing
     assert run_checkpointed_extract(spark, sf_dir, run) == 0
+
+
+def test_checkpointed_run_honours_stage_enables(spark, sf_dir, tmp_path):
+    """The checkpointed run is the one extraction plan: with layout and
+    tables off it writes exactly the rows ``extract`` returns under the
+    same config, and fewer than a full run."""
+    from docling_ocr_qwen3vl_spark.sources.tables import load_table
+
+    cfg = ExtractConfig(do_layout=False, do_tables=False)
+    run = CheckpointedRun(
+        run_id="run-slim",
+        out_path=str(tmp_path / "spans"),
+        lineage_path=str(tmp_path / "lineage"),
+        n_groups=2,
+    )
+    docs = load_table(spark, sf_dir, "documents")
+    assert run_checkpointed_extract(spark, sf_dir, run, documents=docs, config=cfg) == 2
+    written = _collect_sorted(spark.read.parquet(run.out_path))
+    assert written == _collect_sorted(extract(spark, docs, cfg))
+    assert 0 < len(written) < extract(spark, docs).count()

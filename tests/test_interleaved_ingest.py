@@ -3,6 +3,7 @@ pre-resolved media spans; media identity must survive untouched."""
 
 from pyspark.sql import Row
 
+from docling_ocr_qwen3vl_spark.config import ExtractConfig
 from docling_ocr_qwen3vl_spark.plans.pipeline import extract_spans_from_interleaved
 
 
@@ -29,11 +30,15 @@ def test_interleaved_ingest_golden(spark):
             )
         ]
     )
-    out = sorted(
-        extract_spans_from_interleaved(spark, docs).collect(),
-        key=lambda r: r.offset,
-    )
-    assert [(r.offset, r.kind, r.text, r.media_ref) for r in out] == [
+
+    def spans(config=None):
+        out = extract_spans_from_interleaved(spark, docs, config=config).collect()
+        return [
+            (r.offset, r.kind, r.text, r.media_ref)
+            for r in sorted(out, key=lambda r: r.offset)
+        ]
+
+    assert spans() == [
         (0, "text", "Para one.", ""),
         (1, "text", "Para two.", ""),
         # pre-resolved media identity preserved verbatim, never re-minted
@@ -41,4 +46,9 @@ def test_interleaved_ingest_golden(spark):
         (3, "text", "Head", ""),
         # html-internal media get minted refs keyed by (doc, input span, seq)
         (4, "media_ref", "", "media://X/2/1"),
+    ]
+    # OCR off: the raw payload spans are never decoded; the media
+    # passthrough is always kept
+    assert spans(ExtractConfig(do_ocr=False)) == [
+        (0, "media_ref", "", "s3://bucket/img-777.png"),
     ]
