@@ -5,8 +5,9 @@ oracle can recompute bit-identical values — no Spark-private xxhash in any
 semantic position):
 
   * exact        — hash-groupBy on normalized text (see queries.q_dedup_exact)
-  * MinHash+LSH  — word-shingles -> k minhashes -> banded buckets ->
-                   candidate pairs via self-join on band key
+  * MinHash+LSH  — word-shingles -> k minhash lanes (a Python kernel) ->
+                   band keys (one JVM md5 expression) -> candidate pairs
+                   via self-join on band key
   * SimHash      — per-bit majority over shingle hashes -> 60-bit signature;
                    near-dup pairs via pigeonhole bit-block banding
                    (guaranteed recall at the configured hamming radius)
@@ -24,6 +25,7 @@ from boilerplate-heavy corpora are split by the skew-join rule).
 from __future__ import annotations
 
 import re
+from functools import partial
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -116,14 +118,11 @@ def _digests60(enc: bytes, spans) -> "np.ndarray":
 
 
 def _minhash_kernel(
-    text: str,
-    k: int = N_MINHASHES,
-    width: int = SHINGLE_WIDTH,
-    n_bands: int = N_BANDS,
-):
-    """h_j = min over shingles of md5(shingle || '#j') (60-bit int); band
-    keys = md5 of the comma-joined per-band signature rows.  Bit-identical
-    to the DuckDB oracle and to the previous SQL-expression form.
+    text: str, k: int = N_MINHASHES, width: int = SHINGLE_WIDTH
+) -> list[int]:
+    """The k lanes h_j = min over shingles of md5(shingle || '#j') (60-bit
+    int).  Bit-identical to the DuckDB oracle and to the previous
+    SQL-expression form.
 
     Cost shape: ONE full md5 pass over each shingle's bytes, then k cheap
     state-copy + 2-3-byte salt updates (``md5(s).copy().update(salt)`` ==
@@ -150,57 +149,7 @@ def _minhash_kernel(
             v = from_bytes(lane.digest()[:8], "big") >> 4
             if v < mins[j]:
                 mins[j] = v
-    rows = k // n_bands
-    bands = tuple(
-        md5(
-            ",".join(map(str, mins[b * rows : (b + 1) * rows])).encode()
-        ).hexdigest()
-        for b in range(n_bands)
-    )
-    return tuple(mins) + bands
-
-
-# adaptive pre-spread for the signature kernels (see operators/partitioning.py
-# for the measurement and the wide-input pass-through guarantee)
-from .partitioning import spread_for_kernel as _spread_for_kernel
-
-
-def minhash_signature(
-    df: DataFrame,
-    text_col: str = "text",
-    k: int = N_MINHASHES,
-    n_bands: int = N_BANDS,
-) -> DataFrame:
-    """Append h0..h{k-1} minhash columns + band0..band{n_bands-1} LSH keys
-    (k/n_bands-row bands).
-
-    (k, n_bands) tune the similarity threshold the LSH step targets
-    (~(1/n_bands)^(n_bands/k)); the k=8/2-band default matches the oracle,
-    production near-dup sweeps run k=64/8-16 bands via ExtractConfig.
-
-    Arrow-batched pandas UDF rather than a SQL expression: higher-order
-    lambdas over md5 are interpreted row-at-a-time JVM-side (measured
-    ~18 ms/doc; this kernel is ~20x faster) — same reasoning as simhash().
-    """
-    if k % n_bands != 0:
-        raise ValueError(f"k={k} must be divisible by n_bands={n_bands}")
-    band_names = [f"band{b}" for b in range(n_bands)]
-    fields = ", ".join(f"h{j} long" for j in range(k)) + ", " + ", ".join(
-        f"{b} string" for b in band_names
-    )
-
-    @pandas_udf(f"struct<{fields}>")
-    def minhash_udf(text: pd.Series) -> pd.DataFrame:
-        rows = [_minhash_kernel(t, k, SHINGLE_WIDTH, n_bands) for t in text]
-        return pd.DataFrame(
-            rows, columns=[f"h{j}" for j in range(k)] + band_names
-        )
-
-    out = _spread_for_kernel(df).withColumn("_sig", minhash_udf(F.col(text_col)))
-    cols = {f"h{j}": F.col(f"_sig.h{j}") for j in range(k)}
-    for b in band_names:
-        cols[b] = F.col(f"_sig.{b}")
-    return out.withColumns(cols).drop("_sig")
+    return mins
 
 
 # ---- fast production MinHash: one md5 per shingle TOTAL, k lanes by
@@ -226,30 +175,81 @@ def fast_minhash_salts(k: int) -> list[int]:
     return [((j * _FAST_MULT + _FAST_ADD) % _U64) % _U60 for j in range(k)]
 
 
-def _minhash_fast_kernel(
-    text: str, k: int, width: int, n_bands: int, salts
-) -> tuple:
-    import hashlib
-
+def _minhash_fast_kernel(text: str, width: int, salts) -> "np.ndarray":
+    """The len(salts) multiply-shift lanes of one text as an int64 ndarray.
+    Lanes are 60-bit, so the int64 cast is exact and the array<long>
+    column is byte-identical to the uint64 values."""
     import numpy as np
 
     enc, spans = _shingle_spans(text, width)
     bases = _digests60(enc, spans)
     lanes = (bases[:, None] ^ salts[None, :]) * np.uint64(_FAST_MULT) >> np.uint64(4)
-    sig = lanes.min(axis=0)
-    sig_list = sig.tolist()
+    return lanes.min(axis=0).astype(np.int64)
+
+
+# adaptive pre-spread for the signature kernels (see operators/partitioning.py
+# for the measurement and the wide-input pass-through guarantee)
+from .partitioning import spread_for_kernel as _spread_for_kernel
+
+
+def _band_keys(sig: Column, k: int, n_bands: int) -> dict[str, Column]:
+    """band{b} = md5 of band b's k/n_bands lanes as comma-joined decimals.
+    THE one definition of the LSH band-key format (the DuckDB oracles
+    recompute it independently).  A JVM expression, so the md5 never runs
+    in the Python worker."""
     rows = k // n_bands
-    bands = tuple(
-        hashlib.md5(
-            ",".join(map(str, sig_list[b * rows : (b + 1) * rows])).encode()
-        ).hexdigest()
+    return {
+        f"band{b}": F.md5(
+            F.array_join(
+                F.slice(sig, b * rows + 1, rows).cast("array<string>"), ","
+            )
+        )
         for b in range(n_bands)
+    }
+
+
+def _signature(
+    df: DataFrame, text_col: str, kernel, k: int, n_bands: int
+) -> DataFrame:
+    """Append ``sig`` (array<long>, the k lanes ``kernel`` returns for each
+    text) and its band0..band{n_bands-1} LSH keys: the one path both
+    MinHash operators build signatures through.
+
+    Arrow-batched pandas UDF rather than a SQL expression: higher-order
+    lambdas over md5 are interpreted row-at-a-time JVM-side (measured
+    ~18 ms/doc; the md5-salt kernel is ~20x faster) — same reasoning as
+    simhash()."""
+    if k % n_bands != 0:
+        raise ValueError(f"k={k} must be divisible by n_bands={n_bands}")
+
+    @pandas_udf("array<long>")
+    def sig_udf(text: pd.Series) -> pd.Series:
+        return pd.Series([kernel(t) for t in text], dtype=object)
+
+    out = _spread_for_kernel(df).withColumn("sig", sig_udf(F.col(text_col)))
+    return out.withColumns(_band_keys(F.col("sig"), k, n_bands))
+
+
+def minhash_signature(
+    df: DataFrame,
+    text_col: str = "text",
+    k: int = N_MINHASHES,
+    n_bands: int = N_BANDS,
+) -> DataFrame:
+    """Append h0..h{k-1} minhash columns + band0..band{n_bands-1} LSH keys
+    (k/n_bands-row bands).
+
+    (k, n_bands) tune the similarity threshold the LSH step targets
+    (~(1/n_bands)^(n_bands/k)); the k=8/2-band default matches the oracle,
+    production near-dup sweeps run k=64/8-16 bands via ExtractConfig.
+    """
+    kernel = partial(_minhash_kernel, k=k, width=SHINGLE_WIDTH)
+    out = _signature(df, text_col, kernel, k, n_bands)
+    return out.select(
+        *df.columns,
+        *[F.col("sig")[j].alias(f"h{j}") for j in range(k)],
+        *[f"band{b}" for b in range(n_bands)],
     )
-    # ship the signature as an int64 ndarray, not a Python list: Arrow's
-    # ndarray fast path skips 64 boxed-int conversions per row (measured
-    # ~10-15% off the whole batch body; values are 60-bit, so the int64
-    # cast is exact and the array<long> column is byte-identical)
-    return (sig.astype(np.int64),) + bands
 
 
 def minhash_signature_fast(
@@ -264,26 +264,11 @@ def minhash_signature_fast(
     total; lanes are vectorized numpy integer ops), so k=64+ is affordable
     at 100 TB.  Values differ from minhash_signature by design — each
     variant has its own independent DuckDB oracle."""
-    if k % n_bands != 0:
-        raise ValueError(f"k={k} must be divisible by n_bands={n_bands}")
     import numpy as np
 
     salts = np.array(fast_minhash_salts(k), dtype=np.uint64)
-    band_names = [f"band{b}" for b in range(n_bands)]
-    fields = "sig array<long>, " + ", ".join(f"{b} string" for b in band_names)
-
-    @pandas_udf(f"struct<{fields}>")
-    def fast_udf(text: pd.Series) -> pd.DataFrame:
-        rows = [
-            _minhash_fast_kernel(t, k, SHINGLE_WIDTH, n_bands, salts) for t in text
-        ]
-        return pd.DataFrame(rows, columns=["sig"] + band_names)
-
-    out = _spread_for_kernel(df).withColumn("_sig", fast_udf(F.col(text_col)))
-    cols = {"sig": F.col("_sig.sig")}
-    for b in band_names:
-        cols[b] = F.col(f"_sig.{b}")
-    return out.withColumns(cols).drop("_sig")
+    kernel = partial(_minhash_fast_kernel, width=SHINGLE_WIDTH, salts=salts)
+    return _signature(df, text_col, kernel, k, n_bands)
 
 
 def band_cols(df: DataFrame) -> list[str]:

@@ -76,11 +76,15 @@ def read_lineage(spark: SparkSession, lineage_path: str, run_id: str) -> DataFra
     return lineage.filter(F.col("run_id") == run_id)
 
 
-def completed_groups(spark: SparkSession, run: CheckpointedRun) -> set[int]:
+def completed_groups(spark: SparkSession, run: CheckpointedRun) -> dict[int, int]:
+    """Committed group -> its durable ``n_spans``, from one lineage read.
+    One row per ``partition_id``: front ends sharing a root may both commit
+    the same group."""
     lineage = read_lineage(spark, run.lineage_path, run.run_id)
     if lineage is None:
-        return set()
-    return {r.partition_id for r in lineage.select("partition_id").distinct().collect()}
+        return {}
+    rows = lineage.dropDuplicates(["partition_id"]).select("partition_id", "n_spans")
+    return {r.partition_id: r.n_spans for r in rows.collect()}
 
 
 def resume_filter(docs: DataFrame, done: set[int], n_groups: int) -> DataFrame:

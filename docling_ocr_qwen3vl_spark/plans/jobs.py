@@ -92,8 +92,9 @@ def advance_job(spark: SparkSession, job: ExtractJob, max_groups: int = 1) -> in
 
 
 def poll_job(spark: SparkSession, job: ExtractJob) -> dict:
-    """task_status + progress from the lineage table (docling-serve's
-    pending/started/success vocabulary)."""
+    """task_status + progress from ONE lineage read (docling-serve's
+    pending/started/success vocabulary); ``n_spans`` totals the committed
+    groups' spans."""
     done = completed_groups(spark, job.run)
     if not done:
         status = PENDING
@@ -106,5 +107,6 @@ def poll_job(spark: SparkSession, job: ExtractJob) -> dict:
         "task_status": status,
         "groups_done": len(done),
         "n_groups": job.n_groups,
+        "n_spans": sum(done.values()),
         "result_path": job.run.out_path if status == SUCCESS else None,
     }

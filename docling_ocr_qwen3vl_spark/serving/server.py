@@ -43,7 +43,6 @@ from urllib.parse import parse_qs, urlsplit
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..plans.checkpoint import read_lineage
 from ..plans.jobs import PENDING, SUCCESS, ExtractJob, advance_job, load_job, poll_job, submit_job
 
 _TASK_RE = re.compile(r"^/v1/(status/poll|result)/([0-9a-f]{12})$")
@@ -281,10 +280,6 @@ class _Handler(BaseHTTPRequestHandler):
             if not numeric:
                 after = (str(after[0]), after[1])
         rows = result_page(out, after, page_limit).collect()
-        # the total is the lineage's durable per-group n_spans, one row per
-        # group: front ends sharing a root may both commit the same group
-        lineage = read_lineage(self.ctx.spark, job.run.lineage_path, job.run.run_id)
-        n_spans = lineage.dropDuplicates(["partition_id"]).agg(F.sum("n_spans")).first()[0]
         # a short page proves the result is drained; a full page may have
         # more, so hand back the cursor for the next fetch
         next_cursor = (
@@ -296,7 +291,7 @@ class _Handler(BaseHTTPRequestHandler):
             200,
             {
                 "task_id": task_id,
-                "n_spans": n_spans,
+                "n_spans": status["n_spans"],
                 "limit": page_limit,
                 "returned": len(rows),
                 "next_cursor": next_cursor,

@@ -256,3 +256,37 @@ def test_result_before_finish_conflicts(serve, spark, sf_dir, tmp_path):
     job = submit_job(sf_dir, str(tmp_path / "jobs"), n_groups=8)
     code, body = _get(f"{serve}/v1/result/{job.task_id}")
     assert code == 409 and body["task_status"] == "pending"
+
+
+def test_result_page_reads_the_lineage_once(spark, sf_dir, tmp_path, monkeypatch):
+    """One /v1/result request reads the lineage table once: the status and
+    the span total come from the same read."""
+    from docling_ocr_qwen3vl_spark.plans import checkpoint
+    from docling_ocr_qwen3vl_spark.plans.jobs import advance_job, submit_job
+    from docling_ocr_qwen3vl_spark.serving import server as server_mod
+
+    root = str(tmp_path / "jobs")
+    job = submit_job(sf_dir, root, n_groups=1)
+    advance_job(spark, job, max_groups=1)
+
+    calls = []
+    read_lineage = checkpoint.read_lineage
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return read_lineage(*args, **kwargs)
+
+    monkeypatch.setattr(checkpoint, "read_lineage", counting)
+    monkeypatch.setattr(server_mod, "read_lineage", counting, raising=False)
+    # no ctx.start(): no worker thread polls the lineage beside the request
+    server, _ = server_mod.make_server(spark, root)
+    t = threading.Thread(target=server.serve_forever, daemon=True)
+    t.start()
+    try:
+        base = f"http://127.0.0.1:{server.server_address[1]}"
+        code, result = _get(f"{base}/v1/result/{job.task_id}?limit=5")
+    finally:
+        server.shutdown()
+    assert code == 200 and result["returned"] == 5
+    assert result["n_spans"] == spark.read.parquet(job.run.out_path).count()
+    assert len(calls) == 1

@@ -306,25 +306,58 @@ def test_simhash_and_jaccard_near_dups(spark):
 def test_minhash_kernel_state_copy_matches_naive_and_scales_k(spark):
     import hashlib
 
-    from docling_ocr_qwen3vl_spark.operators.dedup import _minhash_kernel
+    from docling_ocr_qwen3vl_spark.operators.dedup import (
+        _FAST_MULT,
+        fast_minhash_salts,
+        minhash_signature_fast,
+    )
 
-    text = "the quick brown fox jumps over the lazy dog again and again"
-    ws = text.split()
+    # a None, an empty, a shorter-than-shingle and a non-ASCII text ride
+    # along: each hashes as one (possibly empty) whole-text shingle
+    texts = [
+        "the quick brown fox jumps over the lazy dog again and again",
+        None,
+        "",
+        "two words",
+        "ñandú straße 日本語 テキスト",
+    ]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+
+    def h60(b: bytes) -> int:
+        return int(hashlib.md5(b).hexdigest()[:15], 16)
+
+    def shingles(text):
+        ws = (text or "").split()
+        return [" ".join(ws[i:i + 3]).encode() for i in range(max(len(ws) - 2, 1))]
+
+    def naive_md5_salt(text, k):
+        return [min(h60(s + f"#{j}".encode()) for s in shingles(text))
+                for j in range(k)]
+
+    def naive_fast(text, k):
+        return [min(((h60(s) ^ salt) * _FAST_MULT % (1 << 64)) >> 4
+                    for s in shingles(text))
+                for salt in fast_minhash_salts(k)]
+
+    def band_keys(lanes, n_bands):
+        rows = len(lanes) // n_bands
+        return [hashlib.md5(",".join(map(str, lanes[b * rows:(b + 1) * rows]))
+                            .encode()).hexdigest() for b in range(n_bands)]
+
     for k, n_bands in ((8, 2), (64, 8)):
-        got = _minhash_kernel(text, k, 3, n_bands)
-        naive = []
-        shingles = [" ".join(ws[i:i + 3]).encode() for i in range(len(ws) - 2)]
-        for j in range(k):
-            salt = f"#{j}".encode()
-            naive.append(min(int(hashlib.md5(s + salt).hexdigest()[:15], 16)
-                             for s in shingles))
-        assert list(got[:k]) == naive, (k, n_bands)
-        rows = k // n_bands
-        for b in range(n_bands):
-            want = hashlib.md5(
-                ",".join(map(str, naive[b * rows:(b + 1) * rows])).encode()
-            ).hexdigest()
-            assert got[k + b] == want
+        bands = [f"band{b}" for b in range(n_bands)]
+        got = minhash_signature(docs, k=k, n_bands=n_bands).collect()
+        assert len(got) == len(texts)
+        for r in got:
+            want = naive_md5_salt(texts[r.doc_id], k)
+            assert [r[f"h{j}"] for j in range(k)] == want, (k, r.doc_id)
+            assert [r[b] for b in bands] == band_keys(want, n_bands)
+        got = minhash_signature_fast(docs, k=k, n_bands=n_bands).collect()
+        assert len(got) == len(texts)
+        for r in got:
+            want = naive_fast(texts[r.doc_id], k)
+            assert r.sig == want, (k, r.doc_id)
+            assert [r[b] for b in bands] == band_keys(want, n_bands)
     # k=64 end-to-end: 8 band columns, LSH still finds the planted pair
     base = " ".join(f"w{i}" for i in range(40))
     docs = spark.createDataFrame([
@@ -599,3 +632,19 @@ def test_spread_for_kernel_adaptive(spark):
     # a streaming frame passes through (no RDD conversion exists for it)
     stream = spark.readStream.format("rate").load()
     assert spread_for_kernel(stream) is stream
+
+
+def test_spread_for_kernel_reprobes_a_rewritten_path(spark, tmp_path):
+    """The spread decision follows the files under a path NOW: a path
+    probed wide and then overwritten with one small file must spread."""
+    from docling_ocr_qwen3vl_spark.operators.partitioning import spread_for_kernel
+
+    width = spark.sparkContext.defaultParallelism
+    path = str(tmp_path / "corpus")
+    spark.range(width * 10).repartition(width).write.parquet(path)
+    wide = spark.read.parquet(path)
+    assert len(wide.inputFiles()) >= width
+    assert spread_for_kernel(wide) is wide
+    spark.range(10).coalesce(1).write.mode("overwrite").parquet(path)
+    spread = spread_for_kernel(spark.read.parquet(path))
+    assert spread.rdd.getNumPartitions() == width
