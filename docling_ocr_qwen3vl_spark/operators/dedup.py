@@ -28,7 +28,7 @@ import re
 from functools import partial
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -37,6 +37,8 @@ from ..functions.text_fns import words
 N_MINHASHES = 8
 SHINGLE_WIDTH = 3
 SIMHASH_BITS = 60  # 15 hex digits of md5 -> fits a signed 64-bit lane
+# dup_components' round cap: rounds = component diameter, far below this
+MAX_ROUNDS = 50
 
 
 def portable_hash64(col: Column) -> Column:
@@ -466,7 +468,6 @@ def near_duplicate_components(
     config=None,
     id_col: str = "doc_id",
     text_col: str = "text",
-    stats_out: dict | None = None,
 ) -> DataFrame:
     """Config-wired near-dup sweep: fast MinHash at
     (config.minhash_k, config.minhash_bands) -> banded candidate pairs ->
@@ -479,9 +480,7 @@ def near_duplicate_components(
         docs, text_col=text_col, k=cfg.minhash_k, n_bands=cfg.minhash_bands
     )
     pairs = lsh_candidate_pairs(sigs, id_col=id_col)
-    return dup_components(
-        docs.select(id_col), pairs, id_col=id_col, stats_out=stats_out
-    )
+    return dup_components(docs.select(id_col), pairs, id_col=id_col)
 
 
 def propagation_round(
@@ -522,7 +521,6 @@ def dup_components(
     ids: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    max_iter: int = 50,
     stats_out: dict | None = None,
 ) -> DataFrame:
     """Connected components over the candidate-pair graph: every doc gets
@@ -533,12 +531,14 @@ def dup_components(
     GraphX/GraphFrames connectedComponents), frontier form: each iteration
     propagates messages only from the labels that CHANGED last round (see
     propagation_round), so steady-state rounds cost one frontier-sized
-    aggregate instead of a full re-propagation; ``localCheckpoint`` cuts
-    the growing lineage, and the loop exits when the frontier empties
-    (iterations needed = component diameter; LSH/banding pair sets form
-    near-cliques, so 2-3 rounds in practice).  The fixpoint is a lattice
-    minimum — independent of iteration order and engine, which is what
-    lets a DuckDB RECURSIVE CTE recompute it as the oracle.
+    aggregate instead of a full re-propagation.  Each round's eager
+    ``localCheckpoint`` cuts the growing lineage and, through an
+    ``Observation`` on the round, counts the changed labels in the same
+    job; the loop exits on a round that changed none (iterations needed =
+    component diameter; LSH/banding pair sets form near-cliques, so 2-3
+    rounds in practice) and raises after MAX_ROUNDS.  The fixpoint is a
+    lattice minimum — independent of iteration order and engine, which is
+    what lets a DuckDB RECURSIVE CTE recompute it as the oracle.
 
     Output: (doc_id, component)."""
     # hash-partition the (static) edge set by the join key ONCE before the
@@ -558,16 +558,19 @@ def dup_components(
     ).repartition("id").localCheckpoint(eager=True)
 
     frontier = None  # round 1: every label is fresh
-    for rounds in range(1, max_iter + 1):
-        refined = propagation_round(edges, labels, frontier).localCheckpoint(
-            eager=True
+    for rounds in range(1, MAX_ROUNDS + 1):
+        changed = Observation()
+        refined = (
+            propagation_round(edges, labels, frontier)
+            .observe(changed, F.count_if("chg").alias("n"))
+            .localCheckpoint(eager=True)
         )
         frontier = refined.filter("chg").select("id", "comp")
         labels = refined.select("id", "comp")
-        # an empty frontier IS the convergence witness: labels only ever
+        # no changed label IS the convergence witness: labels only ever
         # decrease, and a label can next improve only via a message from a
         # label that improved this round
-        if frontier.isEmpty():
+        if changed.get["n"] == 0:
             if stats_out is not None:
                 stats_out["rounds"] = rounds
             break
@@ -575,8 +578,8 @@ def dup_components(
         # returning non-converged labels would SILENTLY leave duplicates
         # labelled as distinct components — fail loudly instead
         raise RuntimeError(
-            f"dup_components did not converge within max_iter={max_iter} "
-            "iterations (labels still changing); the pair graph has a "
-            "longer chain than expected — raise max_iter"
+            f"dup_components did not converge within MAX_ROUNDS={MAX_ROUNDS} "
+            "rounds (labels still changing); the pair graph has a longer "
+            "chain than expected"
         )
     return labels.select(F.col("id").alias(id_col), F.col("comp").alias("component"))

@@ -39,10 +39,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.utils import AnalysisException
 
 from ..config import ExtractConfig
-from ..operators.caching import scoped_caches
 from ..operators.dedup import (
     band_cols,
     dup_components,
@@ -75,36 +73,31 @@ def read_signature_store(
     prunes the current batch's own partition — a retried batch must not
     collide with its own failed attempt's partial write.
 
-    ONLY a missing path reads as the legitimate empty first-batch store;
-    any other analysis failure (corrupt partitions, a non-parquet file at
-    store_dir, schema drift) propagates — swallowing it would silently
-    disable cross-batch dedup for every subsequent batch."""
-    try:
-        store = spark.read.parquet(store_dir)
-    except AnalysisException as exc:
-        # PATH_NOT_FOUND: no store yet; UNABLE_TO_INFER_SCHEMA: the dir
-        # holds only the _dedup_config.json stamp (underscore files are
-        # invisible to the parquet reader) — both are the first-batch case.
-        # Matched by ERROR CLASS (getCondition is the 4.x name, with the
-        # deprecated getErrorClass and a message-substring fallback for
-        # older captured exceptions) — message formats change across Spark
-        # releases; the class names are the stable contract.
-        getter = getattr(exc, "getCondition", None) or getattr(
-            exc, "getErrorClass", None
-        )
-        condition = getter() if getter is not None else None
-        first_batch = {"PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"}
-        if condition in first_batch or (
-            condition is None
-            and any(c in str(exc) for c in first_batch)
+    A store without ``batch_id=*`` partitions is the legitimate empty
+    first-batch store ONLY if nothing else is visible in it (a missing
+    path, or a dir holding just the ``_``-prefixed config stamps, which
+    the parquet reader ignores too); any other content raises, and a
+    partitioned store is read as parquet, so corrupt partitions or schema
+    drift propagate — swallowing them would silently disable cross-batch
+    dedup for every subsequent batch."""
+    if not _list_batch_partitions(spark, store_dir):
+        jvm, fs = _store_fs(spark, store_dir)
+        path = jvm.org.apache.hadoop.fs.Path(store_dir)
+        if fs.exists(path) and any(
+            not st.getPath().getName().startswith(("_", "."))
+            for st in fs.listStatus(path)
         ):
-            return spark.createDataFrame([], STORE_SCHEMA)
-        raise
+            raise ValueError(
+                f"{store_dir} is not a signature store (no batch_id=* "
+                "partitions)"
+            )
+        return spark.createDataFrame([], STORE_SCHEMA)
+    store = spark.read.parquet(store_dir)
     if "band_key" not in store.columns:  # parquet, but not a signature store
         raise ValueError(
             f"{store_dir} is not a signature store (no band_key column)"
         )
-    if "batch_id" in store.columns and exclude_batch_id is not None:
+    if exclude_batch_id is not None:
         store = store.filter(F.col("batch_id") != exclude_batch_id)
     return store.select("band_key")
 
@@ -352,19 +345,20 @@ def _make_process_batch(
     compact_every: int | None,
 ):
     """The shared foreachBatch body of BOTH stream starters: store read
-    with self-batch exclusion, scoped-cache dedup, exactly-once survivor
-    + key writes, periodic compaction.  ``dedup_fn(batch_df, store) ->
-    (survivors, batch_keys)`` is the only modality-specific piece."""
+    with self-batch exclusion, dedup, exactly-once survivor + key writes,
+    periodic compaction.  ``dedup_fn(batch_df, store) -> (survivors,
+    batch_keys)`` is the only modality-specific piece; what it
+    checkpoints is freed by Spark's ContextCleaner once the batch's
+    frames are garbage-collected, so the body holds no release scope."""
     from .stream import write_batch_idempotent
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         store = read_signature_store(spark, store_dir, exclude_batch_id=batch_id)
-        with scoped_caches():
-            survivors, keys = dedup_fn(batch_df, store)
-            write_batch_idempotent(survivors, survivors_dir, batch_id)
-            write_batch_idempotent(keys, store_dir, batch_id)
+        survivors, keys = dedup_fn(batch_df, store)
+        write_batch_idempotent(survivors, survivors_dir, batch_id)
+        write_batch_idempotent(keys, store_dir, batch_id)
         if compact_every and batch_id > 0 and batch_id % compact_every == 0:
             compact_signature_store(spark, store_dir, batch_id)
 
@@ -378,31 +372,26 @@ def dedup_batch(
 ) -> tuple[DataFrame, DataFrame]:
     """One micro-batch through in-batch + cross-batch dedup.
 
-    Returns (survivors, batch_band_keys).  NOT lazy: the component step
-    runs Spark jobs during this call (dup_components' fixpoint loop).  The
-    signature projection is persisted because those jobs and the two
-    output writes are SEPARATE actions (exchange reuse works only inside
-    one plan) — call inside ``scoped_caches()``, as
-    start_incremental_dedup_stream does, so it is released once the
-    outputs are written.
+    Returns (survivors, batch_band_keys).  NOT lazy: the signature
+    projection is checkpointed and the component step runs its fixpoint
+    jobs during this call.  The slim (doc_id, band*) projection feeds
+    those jobs and both output writes, which are SEPARATE actions
+    (exchange reuse works only inside one plan), so it is materialized
+    once with an eager ``localCheckpoint`` — the mechanism
+    dup_components' rounds already use.  Nothing is cached by name: the
+    CacheManager never holds the blocks, and Spark's ContextCleaner frees
+    them, like the per-round checkpoints, once the frames referencing
+    them are garbage-collected.
     ``batch_band_keys`` covers EVERY batch doc — survivors and dropped —
     because global-dedup connectivity flows through dropped docs."""
-    from pyspark import StorageLevel
-
-    from ..operators.caching import register_cache
-
     cfg = config or ExtractConfig()
     sigs = minhash_signature_fast(
         batch_df, k=cfg.minhash_k, n_bands=cfg.minhash_bands
     )
-    # one cache boundary right after the UDF: every consumer below (pair
+    # one materialization right after the UDF: every consumer below (pair
     # join, melt, contamination joins) reads the slim (id, bands)
     # projection, so the signature kernel runs ONCE per batch
-    slim = register_cache(
-        sigs.select("doc_id", *band_cols(sigs)).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    )
+    slim = sigs.select("doc_id", *band_cols(sigs)).localCheckpoint(eager=True)
     pairs = lsh_candidate_pairs(slim)
     all_keys = melt_band_keys(slim)
     survivor_ids = _component_survivor_ids(
@@ -581,28 +570,23 @@ def dedup_batch_embeddings(
     keeps band keys only (never vectors, the same never-the-payload
     property as the text store) — so there precision is what matters and
     the wide key space keeps the conservative drop sound (see
-    EMBEDDING_N_PLANES).  Returns (survivors, batch_band_keys); NOT lazy
-    (dup_components runs jobs), and the key projections are persisted for
-    the separate actions that follow, as in dedup_batch — call inside
-    scoped_caches()."""
-    from pyspark import StorageLevel
-
-    from ..operators.caching import register_cache
+    EMBEDDING_N_PLANES).  Returns (survivors, batch_band_keys); NOT lazy:
+    the key projections are checkpointed eagerly (``localCheckpoint``,
+    nothing cached by name) for the separate actions that follow, and
+    dup_components runs its jobs — as in dedup_batch."""
     from ..operators.similarity import cosine_fast
 
     ids = batch_df.select(F.col("vec_id").alias("doc_id"))
-    # ONE cache boundary after the (single) key kernel: the wide keys
+    # ONE materialization after the (single) key kernel: the wide keys
     # feed the contamination join AND the store output
-    keys = register_cache(
-        embedding_band_keys(batch_df, n_bands, n_planes, dim=dim).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-    )
-    # narrow candidate keys DERIVE from the cached wide keys whenever the
-    # geometries nest (narrow band b = planes [b*cand_planes, ...), all
+    keys = embedding_band_keys(
+        batch_df, n_bands, n_planes, dim=dim
+    ).localCheckpoint(eager=True)
+    # narrow candidate keys DERIVE from the checkpointed wide keys whenever
+    # the geometries nest (narrow band b = planes [b*cand_planes, ...), all
     # inside wide band 0 when n_bands*cand_planes <= n_planes) — a cheap
     # substring projection instead of a second full matmul kernel and a
-    # second persisted copy of the batch
+    # second materialized copy of the batch
     if cand_planes == n_planes:
         cand_keys = keys
     elif n_bands * cand_planes <= n_planes:
@@ -624,11 +608,9 @@ def dedup_batch_embeddings(
             ).alias("band_key"),
         )
     else:
-        cand_keys = register_cache(
-            embedding_band_keys(
-                batch_df, n_bands, cand_planes, dim=dim
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-        )
+        cand_keys = embedding_band_keys(
+            batch_df, n_bands, cand_planes, dim=dim
+        ).localCheckpoint(eager=True)
     left = cand_keys.select(F.col("doc_id").alias("doc_a"), "band_key")
     right = cand_keys.select(F.col("doc_id").alias("doc_b"), "band_key")
     cand = (

@@ -1,20 +1,13 @@
-"""Cache-registry lifecycle: the per-batch projections the streaming dedup
-persists must release when the batch's scope exits — across a long-lived
-stream an unreleased MEMORY_AND_DISK block is a leak the ContextCleaner can
-never reclaim (the registry holds a strong reference).  The batch
-operators persist nothing at all."""
+"""Nothing in the package caches by name: a persisted block sits in the
+session's CacheManager until someone releases it, and across a long-lived
+stream or a 50-query driver run an unreleased MEMORY_AND_DISK block is a
+leak.  The batch operators reuse one exchange instead of a cache, and the
+streaming dedup batch materializes with ``localCheckpoint``, whose blocks
+Spark's ContextCleaner frees when the frame is garbage-collected."""
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import functions as F
-
-from docling_ocr_qwen3vl_spark.operators.caching import (
-    _LIVE_CACHES,
-    register_cache,
-    scoped_caches,
-)
 
 
 def _docs(spark, n=30):
@@ -25,41 +18,14 @@ def _docs(spark, n=30):
     )
 
 
-class _Fake:
-    released = False
-
-    def unpersist(self, blocking=False):
-        self.released = True
-
-
-def test_scoped_caches_releases_only_inner_entries(spark):
-    with scoped_caches():
-        outer = register_cache(_docs(spark).persist())
-        with scoped_caches():
-            inner = register_cache(_docs(spark, 10).persist())
-            inner.count()
-            assert inner.storageLevel.useMemory
-        # inner released, outer untouched
-        assert not inner.storageLevel.useMemory
-        assert [df for df, _ in _LIVE_CACHES] == [outer]
-    assert not _LIVE_CACHES and not outer.storageLevel.useMemory
-
-
-def test_scoped_caches_releases_on_error():
-    fake = _Fake()
-    try:
-        with scoped_caches():
-            register_cache(fake)
-            raise RuntimeError("boom")
-    except RuntimeError:
-        pass
-    assert fake.released and all(df is not fake for df, _ in _LIVE_CACHES)
+def _cache_manager_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_lsh_dup_pairs_query_persists_nothing(spark, tmp_path):
     """The round-3 leak was q_lsh_dup_pairs persisting two signature
     projections per call.  The query is now cache-free: building and
-    running it registers nothing and its executed plan reads no cache."""
+    running it caches nothing and its executed plan reads no cache."""
     import __spark_entry__ as entry
 
     docs = _docs(spark)
@@ -69,42 +35,37 @@ def test_lsh_dup_pairs_query_persists_nothing(spark, tmp_path):
     ).withColumn("n_chars", F.length("text").cast("long")).write.parquet(
         sf_dir + "/documents.parquet"
     )
-    before = len(_LIVE_CACHES)
+    spark.catalog.clearCache()
     out = entry.queries()["lsh_dup_pairs"](spark, sf_dir)
     out.collect()
-    assert len(_LIVE_CACHES) == before
+    assert _cache_manager_empty(spark)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" not in plan
 
 
-def test_scoped_caches_ignores_concurrent_threads_entries():
-    """Two concurrent scopes (two streaming queries' foreachBatch threads)
-    must not release each other's caches: a scope exit may only unpersist
-    entries ITS OWN thread registered inside the scope, and must keep (not
-    drop) a concurrent registrant's entry."""
-    mine, theirs = _Fake(), _Fake()
-    registered = threading.Event()
-    proceed = threading.Event()
+def test_streaming_dedup_batches_cache_nothing(spark, tmp_path):
+    """dedup_batch and dedup_batch_embeddings (nesting and non-nesting
+    candidate geometries), called with no enclosing scope and their
+    outputs collected, leave the CacheManager empty."""
+    from docling_ocr_qwen3vl_spark.streaming.incremental_dedup import (
+        EMBEDDING_N_PLANES,
+        dedup_batch,
+        dedup_batch_embeddings,
+        read_signature_store,
+    )
 
-    def other_thread():
-        with scoped_caches():
-            register_cache(theirs)
-            registered.set()
-            proceed.wait(10)
+    spark.catalog.clearCache()
+    store = read_signature_store(spark, str(tmp_path / "store"))
+    for out in dedup_batch(_docs(spark), store):
+        out.collect()
+    assert _cache_manager_empty(spark)
 
-    t = threading.Thread(target=other_thread)
-    try:
-        with scoped_caches():
-            register_cache(mine)
-            t.start()
-            assert registered.wait(10)
-        # my entry released; the concurrent thread's mid-scope entry is
-        # neither unpersisted nor dropped from the registry
-        assert mine.released
-        assert not theirs.released
-        assert any(df is theirs for df, _ in _LIVE_CACHES)
-    finally:
-        proceed.set()
-        t.join(10)
-    assert not t.is_alive()
-    assert theirs.released and not _LIVE_CACHES
+    vecs = spark.range(20).select(
+        F.col("id").alias("vec_id"),
+        F.array(*[(F.col("id") % (k + 2)).cast("float") + 0.5
+                  for k in range(8)]).alias("embedding"),
+    )
+    for cand_planes in (8, EMBEDDING_N_PLANES - 1):  # nests / does not
+        for out in dedup_batch_embeddings(vecs, store, cand_planes=cand_planes):
+            out.collect()
+        assert _cache_manager_empty(spark), cand_planes

@@ -153,8 +153,26 @@ def test_dup_components_chain_and_singletons(spark):
         Row(doc_a=1, doc_b=0), Row(doc_a=1, doc_b=2), Row(doc_a=2, doc_b=3),
         Row(doc_a=5, doc_b=6),
     ])
-    got = {r.doc_id: r.component for r in dup_components(ids, pairs).collect()}
+    stats = {}
+    got = {
+        r.doc_id: r.component
+        for r in dup_components(ids, pairs, stats_out=stats).collect()
+    }
     assert got == {0: 0, 1: 0, 2: 0, 3: 0, 4: 4, 5: 5, 6: 5, 7: 7}
+    # labels settle in round 3 (3 hops from 0 to 3); round 4 changes none
+    assert stats == {"rounds": 4}
+
+
+def test_dup_components_fails_loudly_past_max_rounds(spark, monkeypatch):
+    import pytest
+
+    from docling_ocr_qwen3vl_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "MAX_ROUNDS", 1)
+    ids = spark.createDataFrame([Row(doc_id=i) for i in range(3)])
+    pairs = spark.createDataFrame([Row(doc_a=0, doc_b=1), Row(doc_a=1, doc_b=2)])
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.dup_components(ids, pairs)
 
 
 def test_kmeans_refined_cells_matches_numpy_reference(spark):

@@ -176,3 +176,28 @@ def test_ivf_pq_expr_plan_is_hash_join_with_grouped_limit(spark):
     assert "CartesianProduct" not in plan
     assert re.search(r"BroadcastHashJoin \[cell#\d+\], \[cell#\d+\]", plan)
     assert "WindowGroupLimit" in plan and ", Partial" in plan
+
+
+def test_package_caches_nothing_by_name():
+    """No named cache in the package: a ``.persist(...)`` or ``.cache()``
+    holds blocks in the session's CacheManager until someone releases
+    them, which a long-lived stream or server never reliably does.  Reuse
+    an exchange inside one plan, or ``localCheckpoint`` across actions."""
+    import ast
+    from pathlib import Path
+
+    import docling_ocr_qwen3vl_spark
+
+    root = Path(docling_ocr_qwen3vl_spark.__file__).parent
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, ast.Call):
+                continue
+            fn = node.func
+            name = getattr(fn, "attr", None) or getattr(fn, "id", "")
+            if name == "register_cache" or (
+                isinstance(fn, ast.Attribute) and name in ("persist", "cache")
+            ):
+                found.append(f"{path.relative_to(root)}:{node.lineno} {name}")
+    assert not found, found

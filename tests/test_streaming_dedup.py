@@ -14,7 +14,6 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from docling_ocr_qwen3vl_spark.operators.caching import scoped_caches
 from docling_ocr_qwen3vl_spark.streaming.incremental_dedup import (
     dedup_batch,
     melt_band_keys,
@@ -127,17 +126,15 @@ def test_retry_excludes_own_partial_store_write(spark, dirs):
         [(1, BASE, "en", "s", len(BASE))],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
-    with scoped_caches():
-        _, keys = dedup_batch(df, read_signature_store(spark, dirs["store"]))
-        keys.write.mode("overwrite").parquet(
-            os.path.join(dirs["store"], "batch_id=7")
-        )
+    _, keys = dedup_batch(df, read_signature_store(spark, dirs["store"]))
+    keys.write.mode("overwrite").parquet(
+        os.path.join(dirs["store"], "batch_id=7")
+    )
     # the retry of batch 7 sees a store WITHOUT its own partial keys
     store_for_retry = read_signature_store(spark, dirs["store"], exclude_batch_id=7)
     assert store_for_retry.count() == 0
-    with scoped_caches():
-        survivors, _ = dedup_batch(df, store_for_retry)
-        assert [r.doc_id for r in survivors.collect()] == [1]
+    survivors, _ = dedup_batch(df, store_for_retry)
+    assert [r.doc_id for r in survivors.collect()] == [1]
     # but a DIFFERENT batch does see those keys
     store_for_next = read_signature_store(spark, dirs["store"], exclude_batch_id=8)
     assert store_for_next.count() > 0
@@ -334,14 +331,12 @@ def test_transitive_chain_contaminates_whole_component(spark):
             "doc_id long, text string, lang string, source string, n_chars long",
         )
 
-    with scoped_caches():
-        # batch 1 accepts A; its band keys become the store
-        _, keys_a = dedup_batch(mk([(1, BASE)]), read_signature_store(spark, "/nonexistent"))
-        store = keys_a.localCheckpoint(eager=True)
-    with scoped_caches():
-        # Y gets the smaller id -> Y is the component representative
-        survivors, _ = dedup_batch(mk([(10, Y), (11, X)]), store)
-        assert survivors.count() == 0  # the whole chain is a duplicate of A
+    # batch 1 accepts A; its band keys become the store
+    _, keys_a = dedup_batch(mk([(1, BASE)]), read_signature_store(spark, "/nonexistent"))
+    store = keys_a.localCheckpoint(eager=True)
+    # Y gets the smaller id -> Y is the component representative
+    survivors, _ = dedup_batch(mk([(10, Y), (11, X)]), store)
+    assert survivors.count() == 0  # the whole chain is a duplicate of A
 
 
 def test_store_config_stamp_blocks_mismatched_restart(spark, tmp_path):
@@ -387,6 +382,82 @@ def test_store_read_failure_is_not_swallowed(spark, tmp_path):
     spark.range(3).write.parquet(str(tmp_path / "wrong"))
     with pytest.raises(ValueError, match="not a signature store"):
         read_signature_store(spark, str(tmp_path / "wrong"))
+
+
+def test_empty_store_read_needs_no_parquet_scan(spark, tmp_path, monkeypatch):
+    """The first-batch store is recognised from the directory listing, not
+    from a failed parquet read: with the reader broken, a missing path and
+    a stamp-only dir still read as the empty store."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    stamped = tmp_path / "stamped"
+    stamped.mkdir()
+    (stamped / "_dedup_config.json").write_text("{}")
+    (stamped / ".hidden.crc").write_text("")
+
+    def broken(self, *paths, **options):
+        raise RuntimeError("parquet reader called for an empty store")
+
+    monkeypatch.setattr(DataFrameReader, "parquet", broken)
+    for path in (tmp_path / "missing", stamped):
+        store = read_signature_store(spark, str(path), exclude_batch_id=0)
+        assert store.columns == ["band_key"] and store.count() == 0
+
+
+def test_crash_between_survivors_and_store_write_is_exactly_once(
+    spark, tmp_path, monkeypatch
+):
+    """A batch that dies after its survivors write but before its store
+    write is replayed on restart: survivors and store keys then equal an
+    uninterrupted run over the same input files."""
+    from docling_ocr_qwen3vl_spark.streaming import stream
+
+    din = str(tmp_path / "in")
+    os.makedirs(din)
+    _write_batch(spark, din, "b0", [(1, BASE), (2, OTHER)])
+    _write_batch(spark, din, "b1", [(3, THIRD), (4, OTHER + " qq zz")])
+    _write_batch(spark, din, "b2", [(5, THIRD + " zz qq"), (6, FOURTH)])
+
+    def start(name):
+        d = {k: str(tmp_path / name / k) for k in ("out", "store", "ckpt")}
+        q = start_incremental_dedup_stream(
+            spark, input_dir=din, survivors_dir=d["out"],
+            store_dir=d["store"], checkpoint_dir=d["ckpt"],
+        )
+        return d, q
+
+    real = stream.write_batch_idempotent
+    crashed = tmp_path / "crashed" / "store"
+
+    def crash_on_store_write_of_batch_1(df, output_dir, batch_id):
+        if batch_id == 1 and output_dir == str(crashed):
+            raise RuntimeError("injected crash before the store write")
+        real(df, output_dir, batch_id)
+
+    monkeypatch.setattr(
+        stream, "write_batch_idempotent", crash_on_store_write_of_batch_1
+    )
+    d, q = start("crashed")
+    with pytest.raises(Exception, match="injected crash"):
+        q.awaitTermination(300)
+    # the crash hit after batch 1's survivors landed, before its keys did
+    assert os.path.isdir(os.path.join(d["out"], "batch_id=1"))
+    assert _store_partition_dirs(d["store"]) == [0]
+    monkeypatch.setattr(stream, "write_batch_idempotent", real)
+    _, q = start("crashed")
+    assert q.awaitTermination(300)
+    ref, q = start("uninterrupted")
+    assert q.awaitTermination(300)
+
+    def store_keys(store_dir):
+        return sorted(
+            (r.batch_id, r.band_key)
+            for r in spark.read.parquet(store_dir).collect()
+        )
+
+    assert _survivor_ids(spark, d["out"]) == _survivor_ids(spark, ref["out"])
+    assert _survivor_ids(spark, ref["out"]) == [1, 2, 3, 6]
+    assert store_keys(d["store"]) == store_keys(ref["store"])
 
 
 def test_replay_batch_key_separates_mutants_from_originals(spark):

@@ -249,14 +249,9 @@ def test_marginal_pair_caught_by_narrow_candidate_bands(spark, dirs):
     assert narrow[1] & narrow[2]
     assert not (wide[1] & wide[2])
 
-    from docling_ocr_qwen3vl_spark.operators.caching import scoped_caches
-
     empty_store = read_signature_store(spark, dirs["store"])
-    with scoped_caches():  # dedup_batch_embeddings registers caches
-        survivors, _ = dedup_batch_embeddings(df, empty_store)
-        ids = sorted(
-            r["vec_id"] for r in survivors.select("vec_id").collect()
-        )
+    survivors, _ = dedup_batch_embeddings(df, empty_store)
+    ids = sorted(r["vec_id"] for r in survivors.select("vec_id").collect())
     assert ids == [1]  # the pair formed, min-id representative kept
 
 
