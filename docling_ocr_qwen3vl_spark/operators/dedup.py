@@ -483,36 +483,34 @@ def near_duplicate_components(
     return dup_components(docs.select(id_col), pairs, id_col=id_col)
 
 
-def propagation_round(
-    edges: DataFrame, labels: DataFrame, frontier: DataFrame | None = None
-) -> DataFrame:
-    """ONE min-label propagation round as an un-executed plan (frontier
-    form): messages flow only from ``frontier`` (the labels that CHANGED
-    last round — pass None for the first round, where every label is
-    fresh), so steady-state rounds join a shrinking frontier against the
-    static edge set instead of re-propagating every label every round.
+def propagation_round(nodes: DataFrame) -> DataFrame:
+    """ONE min-label propagation round as an un-executed plan, Pregel form.
+
+    ``nodes``: (id, comp, nbrs, chg).  The vertices whose label changed
+    last round (``chg``) send it to each neighbour; the messages and every
+    vertex's state row meet in one groupBy(id), which keeps the least
+    label and marks the labels it improved.  Output: the same columns.
 
     Plan shape (audited by tests/test_plan_hygiene.py — the whole-loop
     plan cannot be built without running the jobs that drive convergence):
-    frontier x edges equi-join on src -> min-agg per dst -> LEFT join back
-    onto labels.  Both ``edges`` (repartitioned by src) and ``labels``
-    (hash-partitioned by id from the previous round's join) arrive
-    pre-partitioned on their join keys, so the only exchange per round is
-    the (frontier-sized) message aggregation — the 100 TB property that
-    makes late rounds nearly free.
-
-    ``edges``: (src, dst); ``labels``/``frontier``: (id, comp).  Output:
-    (id, comp, chg) where ``chg`` marks labels improved this round (the
-    next frontier)."""
-    if frontier is None:
-        frontier = labels
-    msgs = edges.join(
-        frontier.select(F.col("id").alias("src"), "comp"), "src"
-    ).select(F.col("dst").alias("id"), "comp")
-    msgs_min = msgs.groupBy("id").agg(F.min("comp").alias("m"))
-    return labels.join(msgs_min, "id", "left").select(
+    one exchange, hashpartitioning(id), and no join or broadcast."""
+    state = nodes.select("id", "comp", "nbrs")
+    msgs = nodes.filter("chg").select(
+        F.explode("nbrs").alias("id"), F.col("comp").alias("m")
+    )
+    grouped = (
+        state.unionByName(msgs, allowMissingColumns=True)
+        .groupBy("id")
+        .agg(
+            F.min("comp").alias("comp"),
+            F.first("nbrs", ignorenulls=True).alias("nbrs"),
+            F.min("m").alias("m"),
+        )
+    )
+    return grouped.select(
         "id",
         F.least("comp", "m").alias("comp"),
+        "nbrs",
         (F.col("m").isNotNull() & (F.col("m") < F.col("comp"))).alias("chg"),
     )
 
@@ -528,45 +526,49 @@ def dup_components(
     step that turns pairwise near-dup hits into keep/drop decisions.
 
     Min-label propagation to fixpoint (the pure-DataFrame equivalent of
-    GraphX/GraphFrames connectedComponents), frontier form: each iteration
-    propagates messages only from the labels that CHANGED last round (see
-    propagation_round), so steady-state rounds cost one frontier-sized
-    aggregate instead of a full re-propagation.  Each round's eager
-    ``localCheckpoint`` cuts the growing lineage and, through an
-    ``Observation`` on the round, counts the changed labels in the same
-    job; the loop exits on a round that changed none (iterations needed =
-    component diameter; LSH/banding pair sets form near-cliques, so 2-3
-    rounds in practice) and raises after MAX_ROUNDS.  The fixpoint is a
-    lattice minimum — independent of iteration order and engine, which is
-    what lets a DuckDB RECURSIVE CTE recompute it as the oracle.
+    GraphX/GraphFrames connectedComponents), Pregel form: the build groups
+    the pairs, taken both ways, by vertex into (id, comp, nbrs, chg) — that
+    is round 1 — and each further round is one propagation_round, two
+    Spark jobs.  No round joins against a checkpoint: with AQE on, a
+    ``localCheckpoint`` scan reports UnknownPartitioning, so such a join
+    would shuffle or broadcast its whole input again every round.  Each
+    round's eager ``localCheckpoint`` cuts the lineage and, through an
+    ``Observation``, counts the changed labels in the same job; the loop
+    exits on a round that changed none (rounds = component diameter) and
+    raises after MAX_ROUNDS.  The fixpoint is a lattice minimum —
+    independent of iteration order and engine, which is what lets a
+    DuckDB RECURSIVE CTE recompute it as the oracle.
+
+    Only docs in ``ids`` take part: the build drops a pair with an
+    endpoint outside ``ids`` (two left-semi joins), so such an endpoint
+    neither receives nor passes a label.  Docs in no pair never enter the
+    loop; they are their own component in the (lazy) output, ``ids``
+    left-joined to the labels.
 
     Output: (doc_id, component)."""
-    # hash-partition the (static) edge set by the join key ONCE before the
-    # eager checkpoint: localCheckpoint preserves outputPartitioning, so
-    # every round's frontier-edges join finds the edges side already
-    # partitioned (guide §2.4: operations keyed the same way share one
-    # exchange); labels are hash(id)-partitioned the same way, and every
-    # round's left join emits hash(id) again, so across the whole fixpoint
-    # loop only the per-round (frontier-sized) message aggregate shuffles.
-    edges = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).unionByName(
-        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    ).repartition("src").localCheckpoint(eager=True)
-    labels = ids.select(
-        F.col(id_col).alias("id"), F.col(id_col).alias("comp")
-    ).repartition("id").localCheckpoint(eager=True)
-
-    frontier = None  # round 1: every label is fresh
+    v = ids.select(F.col(id_col).alias("id"))
+    kept = pairs.join(v, pairs["doc_a"] == v["id"], "left_semi").join(
+        v, pairs["doc_b"] == v["id"], "left_semi"
+    )
+    nodes = (
+        kept.select(F.col("doc_a").alias("id"), F.col("doc_b").alias("nb"))
+        .unionByName(
+            kept.select(F.col("doc_b").alias("id"), F.col("doc_a").alias("nb"))
+        )
+        .groupBy("id")
+        .agg(F.collect_list("nb").alias("nbrs"), F.min("nb").alias("m"))
+        .select(
+            "id",
+            F.least("id", "m").alias("comp"),
+            "nbrs",
+            (F.col("m") < F.col("id")).alias("chg"),
+        )
+    )
     for rounds in range(1, MAX_ROUNDS + 1):
         changed = Observation()
-        refined = (
-            propagation_round(edges, labels, frontier)
-            .observe(changed, F.count_if("chg").alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        frontier = refined.filter("chg").select("id", "comp")
-        labels = refined.select("id", "comp")
+        nodes = nodes.observe(
+            changed, F.count_if("chg").alias("n")
+        ).localCheckpoint(eager=True)
         # no changed label IS the convergence witness: labels only ever
         # decrease, and a label can next improve only via a message from a
         # label that improved this round
@@ -574,6 +576,7 @@ def dup_components(
             if stats_out is not None:
                 stats_out["rounds"] = rounds
             break
+        nodes = propagation_round(nodes)
     else:
         # returning non-converged labels would SILENTLY leave duplicates
         # labelled as distinct components — fail loudly instead
@@ -582,4 +585,7 @@ def dup_components(
             "rounds (labels still changing); the pair graph has a longer "
             "chain than expected"
         )
-    return labels.select(F.col("id").alias(id_col), F.col("comp").alias("component"))
+    labels = nodes.select(F.col("id").alias(id_col), "comp")
+    return ids.select(id_col).join(labels, id_col, "left").select(
+        id_col, F.coalesce("comp", id_col).alias("component")
+    )

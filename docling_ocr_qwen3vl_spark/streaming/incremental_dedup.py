@@ -252,11 +252,13 @@ def compact_signature_store(
         copy+delete, so a crash mid-rename can leave a PARTIAL segment at
         ``batch_id=-current`` — without the marker a retry would treat it
         as complete and delete the sources, silently losing store keys
-        and re-admitting previously-seen near-duplicates.  With the
-        marker, a retry that finds a marker-less segment discards it and
-        recomputes from the (still intact) sources.  Mid-delete crashes
-        only leave temporary key DUPLICATES between the segment and
-        undeleted sources — harmless for an existence-join store.
+        and re-admitting previously-seen near-duplicates.  A retry that
+        finds a marker-less segment discards it and recomputes from the
+        (still intact) sources while ``COMPACT_TMP`` exists; once it is
+        gone the rename finished, so the retry marks the segment complete
+        (sources may already be deleted).  Mid-delete crashes only leave
+        temporary key DUPLICATES between the segment and undeleted
+        sources — harmless for an existence-join store.
     """
     import json
 
@@ -266,6 +268,8 @@ def compact_signature_store(
         return jvm.org.apache.hadoop.fs.Path(os.path.join(store_dir, name))
 
     target = -int(current_batch_id)
+    segment = hpath(f"batch_id={target}")
+    tmp = hpath(COMPACT_TMP)
     marker = hpath(f"batch_id={target}/_folded")
     sources = [
         bid
@@ -274,12 +278,23 @@ def compact_signature_store(
     ]
     if not sources:
         return 0
-    if fs.exists(hpath(f"batch_id={target}")) and not fs.exists(marker):
-        # a prior attempt crashed between rename start and marker write:
-        # the segment's completeness is unknown (non-atomic object-store
-        # rename) — discard it and recompute from the intact sources
-        fs.delete(hpath(f"batch_id={target}"), True)
-    if not fs.exists(hpath(f"batch_id={target}")):
+
+    def mark_folded() -> None:
+        out = fs.create(marker, True)
+        try:
+            out.write(bytearray(json.dumps({"sources": sources}).encode()))
+        finally:
+            out.close()
+
+    if fs.exists(segment) and not fs.exists(marker):
+        if fs.exists(tmp):
+            # a prior attempt crashed mid-rename: the segment's
+            # completeness is unknown (non-atomic object-store rename) —
+            # discard it and recompute from the intact sources
+            fs.delete(segment, True)
+        else:  # crashed before the marker write, or made by older code
+            mark_folded()
+    if not fs.exists(segment):
         if len(sources) < 2:
             return 0  # nothing worth folding yet
         # ONE partition-pruned scan of the store root (the partition filter
@@ -291,19 +306,14 @@ def compact_signature_store(
             .filter(F.col("batch_id").isin(sources))
             .select("band_key")
         )
-        tmp = hpath(COMPACT_TMP)
         consolidated.distinct().write.mode("overwrite").parquet(
             os.path.join(store_dir, COMPACT_TMP)
         )
-        if not fs.rename(tmp, hpath(f"batch_id={target}")):
+        if not fs.rename(tmp, segment):
             raise IOError(
                 f"compaction rename {COMPACT_TMP} -> batch_id={target} failed"
             )
-        out = fs.create(marker, True)
-        try:
-            out.write(bytearray(json.dumps({"sources": sources}).encode()))
-        finally:
-            out.close()
+        mark_folded()
     # marker present (this attempt's write or a prior attempt's): the
     # segment provably holds every source's keys — drop the sources
     for bid in sources:
@@ -395,7 +405,7 @@ def dedup_batch(
     pairs = lsh_candidate_pairs(slim)
     all_keys = melt_band_keys(slim)
     survivor_ids = _component_survivor_ids(
-        batch_df.select("doc_id"), all_keys, pairs, store
+        slim.select("doc_id"), all_keys, pairs, store
     )
     survivors = batch_df.join(survivor_ids, "doc_id")
     batch_keys = all_keys.select("band_key").distinct()

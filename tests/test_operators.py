@@ -163,6 +163,50 @@ def test_dup_components_chain_and_singletons(spark):
     assert stats == {"rounds": 4}
 
 
+def test_dup_components_two_jobs_per_round(spark):
+    """Each propagation round is one union + one groupBy: two Spark jobs
+    (the shuffle map stage and the checkpoint), whatever the build costs.
+    A longer chain needs more rounds; the extra rounds may add at most two
+    jobs each, and the whole call at most the build's five on top."""
+    from docling_ocr_qwen3vl_spark.operators.dedup import dup_components
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs_and_rounds(n):
+        ids = spark.createDataFrame([Row(doc_id=i) for i in range(n)])
+        pairs = spark.createDataFrame(
+            [Row(doc_a=i, doc_b=i + 1) for i in range(n - 1)]
+        )
+        group = f"dup_components_chain_{n}"
+        stats = {}
+        sc.setJobGroup(group, group)
+        try:
+            dup_components(ids, pairs, stats_out=stats)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(tracker.getJobIdsForGroup(group)), stats["rounds"]
+
+    jobs_short, rounds_short = jobs_and_rounds(4)
+    jobs_long, rounds_long = jobs_and_rounds(8)
+    assert (rounds_short, rounds_long) == (4, 8)
+    assert jobs_long - jobs_short <= 2 * (rounds_long - rounds_short)
+    # round 1 is the build itself: two shuffles AQE turns into the ids
+    # broadcast, the broadcast, the adjacency shuffle and its checkpoint
+    assert jobs_short <= 2 * (rounds_short - 1) + 5
+
+
+def test_dup_components_ignores_pair_endpoints_outside_ids(spark):
+    """A pair endpoint missing from ``ids`` neither receives nor passes a
+    label: doc 0 below is in pairs only, so doc 1 must NOT take label 0."""
+    from docling_ocr_qwen3vl_spark.operators.dedup import dup_components
+
+    ids = spark.createDataFrame([Row(doc_id=1), Row(doc_id=2)])
+    pairs = spark.createDataFrame([Row(doc_a=0, doc_b=1), Row(doc_a=1, doc_b=2)])
+    got = {r.doc_id: r.component for r in dup_components(ids, pairs).collect()}
+    assert got == {1: 1, 2: 1}
+
+
 def test_dup_components_fails_loudly_past_max_rounds(spark, monkeypatch):
     import pytest
 

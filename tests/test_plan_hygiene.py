@@ -111,15 +111,23 @@ def test_lsh_pair_union_plan_clean(spark, sf_dir):
 
 
 def test_propagation_round_plan_clean(spark):
-    """One dup_components round: edges x labels is an EQUI-join + min-agg."""
+    """One dup_components round: state rows and messages meet in ONE
+    groupBy — no join, no broadcast, and exactly one exchange, on id."""
     from docling_ocr_qwen3vl_spark.operators.dedup import propagation_round
 
-    edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
-    labels = spark.createDataFrame([(1, 1), (2, 2), (3, 3)], "id long, comp long")
-    refined = propagation_round(edges, labels)
+    nodes = spark.createDataFrame(
+        [(1, 1, [2], False), (2, 1, [1, 3], True), (3, 2, [2], True)],
+        "id long, comp long, nbrs array<long>, chg boolean",
+    )
+    refined = propagation_round(nodes)
     _assert_clean(refined, "propagation_round")
     plan = refined._jdf.queryExecution().executedPlan().toString()
-    assert "Join" in plan  # it really is the join round, not a degenerate plan
+    assert "Join" not in plan
+    assert "BroadcastExchange" not in plan
+    assert plan.count("Exchange") == 1
+    assert "Exchange hashpartitioning(id#" in plan
+    got = {r.id: (r.comp, r.chg) for r in refined.collect()}
+    assert got == {1: (1, False), 2: (1, False), 3: (1, True)}
 
 
 def test_lloyd_iteration_plan_clean(spark):

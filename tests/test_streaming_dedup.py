@@ -9,6 +9,7 @@ store-lookup dedup, and checkpoint-resumed store growth in one flow."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -250,11 +251,12 @@ def test_compact_signature_store_idempotent_retry(spark, tmp_path):
 
 
 def test_compact_discards_markerless_partial_segment(spark, tmp_path):
-    """A consolidated segment WITHOUT its completeness marker is a crashed
-    mid-rename artifact (object-store directory rename is a non-atomic
-    copy+delete): it may be missing keys, so a retry must discard it and
-    recompute from the still-intact sources instead of trusting it and
-    deleting them — the silent-key-loss path the marker exists to close."""
+    """A consolidated segment WITHOUT its completeness marker, next to a
+    still-present rename source, is a crashed mid-rename artifact
+    (object-store directory rename is a non-atomic copy+delete): it may be
+    missing keys, so a retry must discard it and recompute from the
+    still-intact sources instead of trusting it and deleting them — the
+    silent-key-loss path the marker exists to close."""
     import json
 
     from docling_ocr_qwen3vl_spark.streaming.incremental_dedup import (
@@ -270,8 +272,12 @@ def test_compact_discards_markerless_partial_segment(spark, tmp_path):
 
     write_keys(0, ["0:aa", "1:bb"])
     write_keys(1, ["0:cc"])
-    # partial copy from a crashed rename: one key missing, NO marker
+    # partial copy from a crashed rename: one key missing, NO marker, and
+    # the rename's source still in place
     write_keys(-2, ["0:aa"])
+    spark.createDataFrame(
+        [(k,) for k in ("0:aa", "1:bb", "0:cc")], "band_key string"
+    ).write.parquet(os.path.join(store, "_compact_tmp"))
 
     assert compact_signature_store(spark, store, 2) == 2
     assert _store_partition_dirs(store) == [-2]
@@ -282,6 +288,93 @@ def test_compact_discards_markerless_partial_segment(spark, tmp_path):
     assert got == {"0:aa", "1:bb", "0:cc"}  # recomputed, nothing lost
     with open(os.path.join(store, "batch_id=-2", "_folded")) as f:
         assert json.load(f)["sources"] == [0, 1]
+
+
+def _store_keys(spark, store):
+    rows = [r.band_key for r in spark.read.parquet(store).collect()]
+    assert len(rows) == len(set(rows)), "duplicate band keys in the store"
+    return set(rows)
+
+
+def test_compact_keeps_markerless_segment_once_rename_finished(spark, tmp_path):
+    """A segment with no marker but no rename source left is complete: an
+    older version wrote no marker, then crashed mid-delete.  The retry must
+    keep it (writing the marker) even though only one source survives —
+    recomputing from that source alone would lose batch 0's keys."""
+    from docling_ocr_qwen3vl_spark.streaming.incremental_dedup import (
+        compact_signature_store,
+    )
+
+    store = str(tmp_path / "store")
+
+    def write_keys(bid, keys):
+        spark.createDataFrame([(k,) for k in keys], "band_key string").write.mode(
+            "overwrite"
+        ).parquet(os.path.join(store, f"batch_id={bid}"))
+
+    write_keys(1, ["0:cc"])
+    write_keys(-2, ["0:aa", "1:bb", "0:cc"])  # batch 0 already deleted
+
+    assert compact_signature_store(spark, store, 2) == 1
+    assert _store_partition_dirs(store) == [-2]
+    assert os.path.exists(os.path.join(store, "batch_id=-2", "_folded"))
+    assert _store_keys(spark, store) == {"0:aa", "1:bb", "0:cc"}
+
+
+def test_compact_crash_between_rename_and_marker_keeps_segment(
+    spark, tmp_path, monkeypatch
+):
+    """Kill the compaction after the rename, before the marker write.  The
+    retry keeps the renamed segment as is (same data files), drops the
+    sources, and the store neither loses nor duplicates a key."""
+    from docling_ocr_qwen3vl_spark.streaming import incremental_dedup
+
+    store = str(tmp_path / "store")
+
+    def write_keys(bid, keys):
+        spark.createDataFrame([(k,) for k in keys], "band_key string").write.mode(
+            "overwrite"
+        ).parquet(os.path.join(store, f"batch_id={bid}"))
+
+    write_keys(0, ["0:aa", "1:bb"])
+    write_keys(1, ["0:cc", "0:aa"])  # "0:aa" in both sources
+
+    class Killed(Exception):
+        pass
+
+    class CrashOnMarker:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+        def create(self, path, overwrite):
+            raise Killed(str(path))
+
+    real_store_fs = incremental_dedup._store_fs
+
+    def crashing_store_fs(*args):
+        jvm, fs = real_store_fs(*args)
+        return jvm, CrashOnMarker(fs)
+
+    monkeypatch.setattr(incremental_dedup, "_store_fs", crashing_store_fs)
+    with pytest.raises(Killed, match="_folded"):
+        incremental_dedup.compact_signature_store(spark, store, 2)
+    monkeypatch.undo()
+
+    segment = os.path.join(store, "batch_id=-2")
+    assert _store_partition_dirs(store) == [-2, 0, 1]
+    assert not os.path.exists(os.path.join(store, "_compact_tmp"))
+    assert not os.path.exists(os.path.join(segment, "_folded"))
+    files = sorted(f for f in os.listdir(segment) if f.startswith("part-"))
+
+    assert incremental_dedup.compact_signature_store(spark, store, 2) == 2
+    assert _store_partition_dirs(store) == [-2]
+    assert sorted(f for f in os.listdir(segment) if f.startswith("part-")) == files
+    with open(os.path.join(segment, "_folded")) as f:
+        assert json.load(f)["sources"] == [0, 1]
+    assert _store_keys(spark, store) == {"0:aa", "1:bb", "0:cc"}
 
 
 def test_dedup_survivors_query_has_streaming_arm(spark):
