@@ -10,7 +10,7 @@ maps 1:1 onto the checkpointed run:
 
   submit_job   -> allocates task_id + paths, writes the job spec
   advance_job  -> processes up to max_groups uncommitted hash groups
-                  (a scheduler/cron calls this; each call is one Spark job)
+                  (a scheduler/cron calls this; one write per wave)
   poll_job     -> task_status derived from the lineage table (the same
                   rows a kill/resume uses), with per-group progress
   result_path  -> the committed parquet output
@@ -25,10 +25,11 @@ from __future__ import annotations
 import json
 import os
 import uuid
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass
 
 from pyspark.sql import SparkSession
 
+from ..config import ExtractConfig
 from .checkpoint import CheckpointedRun, completed_groups, run_checkpointed_extract
 
 PENDING = "pending"
@@ -41,7 +42,8 @@ class ExtractJob:
     task_id: str
     sf_dir: str
     root: str
-    n_groups: int = 8
+    n_groups: int
+    config: ExtractConfig
 
     @property
     def run(self) -> CheckpointedRun:
@@ -57,23 +59,21 @@ class ExtractJob:
         return os.path.join(self.root, self.task_id, "job.json")
 
 
-def submit_job(sf_dir: str, root: str, n_groups: int = 8) -> ExtractJob:
-    """Allocate a task_id and persist the job spec (no Spark work yet —
-    submission is instant, like the HTTP endpoint's 200 + task_id)."""
+def submit_job(sf_dir: str, root: str, n_groups: int = 8, config=None) -> ExtractJob:
+    """Allocate a task_id and persist the job spec and its config (no Spark
+    work yet — submission is instant, like the HTTP endpoint's 200 + task_id)."""
     if n_groups < 1:
         # a zero-group job could never reach SUCCESS (completed_groups
         # stays empty) and would spin any scheduler polling it forever
         raise ValueError(f"n_groups must be >= 1, got {n_groups}")
     job = ExtractJob(task_id=uuid.uuid4().hex[:12], sf_dir=sf_dir, root=root,
-                     n_groups=n_groups)
+                     n_groups=n_groups, config=config or ExtractConfig())
     os.makedirs(os.path.dirname(job.spec_path), exist_ok=True)
     # write-then-rename: a submit killed mid-write must never leave a
     # truncated job.json for pollers/restart-resume to trip over
     tmp_path = job.spec_path + ".tmp"
     with open(tmp_path, "w") as fh:
-        json.dump(
-            {"task_id": job.task_id, "sf_dir": sf_dir, "n_groups": n_groups}, fh
-        )
+        json.dump(asdict(job), fh)
     os.replace(tmp_path, job.spec_path)
     return job
 
@@ -82,13 +82,16 @@ def load_job(root: str, task_id: str) -> ExtractJob:
     with open(os.path.join(root, task_id, "job.json")) as fh:
         spec = json.load(fh)
     return ExtractJob(task_id=spec["task_id"], sf_dir=spec["sf_dir"], root=root,
-                      n_groups=spec["n_groups"])
+                      n_groups=spec["n_groups"],
+                      config=ExtractConfig(**spec.get("config", {})))
 
 
 def advance_job(spark: SparkSession, job: ExtractJob, max_groups: int = 1) -> int:
     """Process up to ``max_groups`` uncommitted groups; idempotent and
-    crash-safe (delegates to the checkpointed run)."""
-    return run_checkpointed_extract(spark, job.sf_dir, job.run, max_groups=max_groups)
+    crash-safe (delegates to the checkpointed run, with the job's config)."""
+    return run_checkpointed_extract(
+        spark, job.sf_dir, job.run, max_groups=max_groups, config=job.config
+    )
 
 
 def poll_job(spark: SparkSession, job: ExtractJob) -> dict:

@@ -18,8 +18,8 @@ The reference is driven through docling-serve's HTTP protocol
 
 This module serves the SAME protocol over ``plans/jobs.py``: submission
 allocates a lineage-backed checkpointed run; a single background worker
-thread runs ALL extraction work, advancing jobs group-by-group (each
-advance = one idempotent Spark job); handler threads only submit specs and
+thread runs ALL extraction work, advancing each job one group per tick (a
+one-group wave: one idempotent write); handler threads only submit specs and
 run read-only lineage/output queries (concurrent job submission is
 thread-safe on a SparkSession).  Status lives in the lineage table, so a
 killed server resumes exactly where it stopped and any number of front
@@ -137,7 +137,7 @@ class ServeContext:
             try:
                 job = load_job(self.root, task_id)
             except (FileNotFoundError, NotADirectoryError, KeyError,
-                    ValueError, json.JSONDecodeError):
+                    TypeError, ValueError, json.JSONDecodeError):
                 continue  # stray files / corrupt specs must not block startup
             try:
                 done = poll_job(self.spark, job)["task_status"] == SUCCESS
@@ -197,7 +197,7 @@ class _Handler(BaseHTTPRequestHandler):
         try:
             return load_job(self.ctx.root, task_id)
         except (FileNotFoundError, NotADirectoryError, KeyError,
-                ValueError, json.JSONDecodeError):
+                TypeError, ValueError, json.JSONDecodeError):
             # missing OR corrupt/truncated spec both read as "unknown task"
             # rather than killing the handler thread
             return None

@@ -83,8 +83,8 @@ def write_batch_idempotent(spans: DataFrame, output_dir: str, batch_id: int) -> 
     a partial/complete write is retried with the SAME batch_id, and a blind
     ``mode('append')`` would duplicate its rows.  Overwriting the batch's
     own deterministic directory makes the retry a no-op-equivalent, which
-    upgrades the sink to exactly-once (same idempotency argument as the
-    per-group overwrite in ``plans/checkpoint.py``).  In production the
+    upgrades the sink to exactly-once (same argument as a wave's dynamic
+    ``group=N`` overwrite in ``plans/checkpoint.py``).  In production the
     sink is an Iceberg ``overwritePartitions`` on the same key."""
     spans.write.mode("overwrite").parquet(
         os.path.join(output_dir, f"batch_id={batch_id}")
