@@ -46,7 +46,7 @@ MEDIA_LABELS = frozenset({"picture", "table"})
 # without a bbox anchor at the region origin (0, 0), exactly like the
 # reference's full-region fallback bbox (model.py:237-245), so they keep
 # their emission order relative to each other.
-DecodedElement = tuple  # (seq: int, kind: str, text: str, y1: int, x1: int)
+# Layout: (seq: int, kind: str, text: str, y1: int, x1: int)
 
 
 class DeterministicDecoder:

@@ -7,7 +7,7 @@ semantic position):
   * exact        — hash-groupBy on normalized text (see queries.q_dedup_exact)
   * MinHash+LSH  — word-shingles -> k minhash lanes (a Python kernel) ->
                    band keys (one JVM md5 expression) -> candidate pairs
-                   via self-join on band key
+                   (key_pairs), or a star per band bucket for components
   * SimHash      — per-bit majority over shingle hashes -> 60-bit signature;
                    near-dup pairs via pigeonhole bit-block banding
                    (guaranteed recall at the configured hamming radius)
@@ -28,7 +28,7 @@ import re
 from functools import partial
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -292,27 +292,43 @@ def melt_bands(signatures: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Distinct candidate pairs sharing at least one LSH band.
-
-    ONE equi self-join of the melted band table on (bi, bk) — a hash
-    shuffle on the band key, never a cartesian — then distinct.  Output:
-    (doc_a, doc_b), doc_a < doc_b.
-
-    The melted table is repartitioned on the join key once and both join
-    sides read that repartition: their exchanges are identical, so Spark
-    plans the second as a ReusedExchange of the first and the signature
-    kernel runs ONCE with no cache (without the shared exchange each side
-    re-runs the kernel).  The plan carries one band exchange however many
-    bands there are (tests/test_plan_hygiene.py asserts the shape).
-    """
-    melted = melt_bands(signatures, id_col).repartition("bi", "bk")
-    left = melted.select(F.col(id_col).alias("doc_a"), "bi", "bk")
-    right = melted.select(F.col(id_col).alias("doc_b"), "bi", "bk")
+def key_pairs(keys: DataFrame, id_col: str) -> DataFrame:
+    """Distinct (doc_a, doc_b), doc_a < doc_b, of ids sharing a bucket.
+    ``keys``: the id column plus the bucket-key columns (melt_bands'
+    ``(id, bi, bk)``, or ``(doc_id, band_key)``).  ONE equi self-join of
+    one repartition on the bucket columns: both sides are the same
+    exchange, which Spark reuses, so the key kernel runs ONCE with no
+    cache (tests/test_plan_hygiene.py).  A bucket of N ids costs N²/2
+    pairs; for components, bucket_edges costs N."""
+    bucket = [c for c in keys.columns if c != id_col]
+    keys = keys.repartition(*bucket)
+    left = keys.select(F.col(id_col).alias("doc_a"), *bucket)
+    right = keys.select(F.col(id_col).alias("doc_b"), *bucket)
     return (
-        left.join(right, ["bi", "bk"])
+        left.join(right, bucket)
         .filter(F.col("doc_a") < F.col("doc_b"))
         .select("doc_a", "doc_b")
+        .distinct()
+    )
+
+
+def lsh_candidate_pairs(signatures: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Distinct (doc_a, doc_b), doc_a < doc_b, sharing at least one LSH
+    band: one band exchange however many bands there are."""
+    return key_pairs(melt_bands(signatures, id_col), id_col)
+
+
+def bucket_edges(keys: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """A star per bucket: distinct edges (doc_a = the bucket's least id,
+    doc_b = each other member); ``keys`` as in key_pairs.  A bucket is a
+    clique of candidate pairs and the star spans the same members, so the
+    components are the same (given every keyed id is in dup_components'
+    ids) with N edges, not N²/2: a hot key costs its size, not its square."""
+    bucket = [c for c in keys.columns if c != id_col]
+    hub = F.min(id_col).over(Window.partitionBy(*bucket))
+    return (
+        keys.select(hub.alias("doc_a"), F.col(id_col).alias("doc_b"))
+        .filter(F.col("doc_a") < F.col("doc_b"))
         .distinct()
     )
 
@@ -342,11 +358,14 @@ def simhash(df: DataFrame, text_col: str = "text", bits: int = SIMHASH_BITS) -> 
     for 500 docs vs ~0.1 s for this Arrow-batched numpy kernel.  The DuckDB
     oracle recomputes the identical value from SQL, so the cross-check stays
     independent of this implementation.
+    Marked nondeterministic to pin it: a filter inferred from a join on
+    ``simhash`` would otherwise be pushed below the spread and re-run it.
     """
     @pandas_udf("long")
     def simhash_udf(text: pd.Series) -> pd.Series:
         return text.map(lambda t: _simhash_kernel(t, bits))
 
+    simhash_udf = simhash_udf.asNondeterministic()
     return _spread_for_kernel(df).withColumn("simhash", simhash_udf(F.col(text_col)))
 
 
@@ -384,11 +403,12 @@ def simhash_near_pairs(
             for j in range(n_blocks)
         ]
     )
+    # one shared, reused exchange for both join sides (as in key_pairs)
     exploded = sigs.select(
         F.col(id_col).alias("id"),
         F.col("simhash"),
         F.posexplode(blocks).alias("bid", "bval"),
-    )
+    ).repartition("bid", "bval")
     left = exploded.select(
         F.col("id").alias("doc_a"), F.col("simhash").alias("sim_a"), "bid", "bval"
     )
@@ -470,7 +490,7 @@ def near_duplicate_components(
     text_col: str = "text",
 ) -> DataFrame:
     """Config-wired near-dup sweep: fast MinHash at
-    (config.minhash_k, config.minhash_bands) -> banded candidate pairs ->
+    (config.minhash_k, config.minhash_bands) -> a star per band bucket ->
     connected components.  This is where ExtractConfig's dedup knobs take
     effect; the standalone operators keep explicit parameters."""
     from ..config import ExtractConfig
@@ -479,8 +499,8 @@ def near_duplicate_components(
     sigs = minhash_signature_fast(
         docs, text_col=text_col, k=cfg.minhash_k, n_bands=cfg.minhash_bands
     )
-    pairs = lsh_candidate_pairs(sigs, id_col=id_col)
-    return dup_components(docs.select(id_col), pairs, id_col=id_col)
+    edges = bucket_edges(melt_bands(sigs, id_col), id_col)
+    return dup_components(docs.select(id_col), edges, id_col=id_col)
 
 
 def propagation_round(nodes: DataFrame) -> DataFrame:
@@ -521,13 +541,14 @@ def dup_components(
     id_col: str = "doc_id",
     stats_out: dict | None = None,
 ) -> DataFrame:
-    """Connected components over the candidate-pair graph: every doc gets
-    the MIN doc_id of its component as the canonical representative — the
-    step that turns pairwise near-dup hits into keep/drop decisions.
+    """Connected components over the edges ``pairs`` (doc_a, doc_b) — a
+    star per LSH band bucket (bucket_edges), or verified pairs: every doc
+    gets the MIN doc_id of its component as the canonical representative
+    — the step that turns near-dup hits into keep/drop decisions.
 
     Min-label propagation to fixpoint (the pure-DataFrame equivalent of
     GraphX/GraphFrames connectedComponents), Pregel form: the build groups
-    the pairs, taken both ways, by vertex into (id, comp, nbrs, chg) — that
+    the edges, taken both ways, by vertex into (id, comp, nbrs, chg) — that
     is round 1 — and each further round is one propagation_round, two
     Spark jobs.  No round joins against a checkpoint: with AQE on, a
     ``localCheckpoint`` scan reports UnknownPartitioning, so such a join
@@ -539,9 +560,9 @@ def dup_components(
     independent of iteration order and engine, which is what lets a
     DuckDB RECURSIVE CTE recompute it as the oracle.
 
-    Only docs in ``ids`` take part: the build drops a pair with an
+    Only docs in ``ids`` take part: the build drops an edge with an
     endpoint outside ``ids`` (two left-semi joins), so such an endpoint
-    neither receives nor passes a label.  Docs in no pair never enter the
+    neither receives nor passes a label.  Docs in no edge never enter the
     loop; they are their own component in the (lazy) output, ``ids``
     left-joined to the labels.
 

@@ -427,7 +427,7 @@ def cosine_fast(a_col: str, b_col: str):
         den = np.sqrt((A * A).sum(axis=1)) * np.sqrt((B * B).sum(axis=1))
         return pd.Series(num / den)
 
-    return cos_udf(F.col(a_col), F.col(b_col))
+    return cos_udf.asNondeterministic()(F.col(a_col), F.col(b_col))
 
 
 def ivf_knn(

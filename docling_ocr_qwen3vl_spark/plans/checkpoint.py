@@ -43,7 +43,6 @@ LINEAGE_SCHEMA = (
     "run_id string, partition_id int, doc_id_min string, doc_id_max string, "
     "n_docs long, n_spans long, wall_ms long, committed_at string"
 )
-LINEAGE_COLUMNS = tuple(f.split()[0] for f in LINEAGE_SCHEMA.split(", "))
 # target wall time of one wave: the most work a driver kill can lose
 WAVE_SECONDS = 60
 

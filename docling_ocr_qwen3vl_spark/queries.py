@@ -611,9 +611,9 @@ def _streaming_embedding_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End of the dedup pipeline, in THREE execution modes under a mode
-    key: 'batch' = corpus -> MinHash-LSH pairs -> connected components ->
-    SURVIVORS (component representatives only), i.e. the cleaned corpus a
-    training run would actually read; 'streaming' = the same corpus
+    key: 'batch' = corpus -> MinHash-LSH band buckets -> connected
+    components -> SURVIVORS (component representatives only), i.e. the
+    cleaned corpus a training run reads; 'streaming' = the same corpus
     replayed through the incremental streaming dedup's availableNow
     micro-batches (in-batch components + signature-store contamination);
     'embedding_streaming' = the planted-copy embedding corpus replayed
@@ -622,11 +622,12 @@ def q_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     contamination).  Each streaming oracle computes its semantics
     declaratively, so both exactly-once store subsystems are
     driver-checked end-to-end."""
-    from .operators.dedup import dup_components, lsh_candidate_pairs, minhash_signature
+    from .operators.dedup import bucket_edges, dup_components, melt_bands
+    from .operators.dedup import minhash_signature
 
     docs = _docs_with_mutants(spark, sf_dir)
     comps = dup_components(
-        docs.select("doc_id"), lsh_candidate_pairs(minhash_signature(docs))
+        docs.select("doc_id"), bucket_edges(melt_bands(minhash_signature(docs)))
     )
     batch = (
         comps.filter(F.col("doc_id") == F.col("component"))
@@ -1074,23 +1075,24 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components over the MinHash-LSH candidate-pair graph from
-    BOTH kernels, with a kernel key: every doc labelled with its
+    """Connected components over MinHash-LSH band buckets (a star per
+    bucket) from BOTH kernels, with a kernel key: every doc labelled with its
     component's min doc_id (the canonical keeper) — an ITERATIVE graph
     algorithm whose lattice fixpoint a DuckDB recursive CTE recomputes
     independently.  fast_k64 runs the config-wired production sweep
     (near_duplicate_components behind ExtractConfig.minhash_k/bands)."""
     from .config import ExtractConfig
     from .operators.dedup import (
+        bucket_edges,
         dup_components,
-        lsh_candidate_pairs,
+        melt_bands,
         minhash_signature,
         near_duplicate_components,
     )
 
     docs = _docs_with_mutants(spark, sf_dir)
-    pairs = lsh_candidate_pairs(minhash_signature(docs))
-    k8 = dup_components(docs.select("doc_id"), pairs).withColumn(
+    edges = bucket_edges(melt_bands(minhash_signature(docs)))
+    k8 = dup_components(docs.select("doc_id"), edges).withColumn(
         "kernel", F.lit("md5_k8")
     )
     k64 = near_duplicate_components(

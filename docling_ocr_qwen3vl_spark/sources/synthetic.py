@@ -39,7 +39,6 @@ from ..operators.partitioning import repartition_pages
 
 # Page-count / kind cycle (kept tiny and prime-ish so all combinations occur).
 N_PAGES_MOD = 3  # n_pages = doc_id % 3 + 1
-KINDS = ("qwenvl_html", "plain_text", "layout_json", "table_json")
 
 
 def _w(ws: Column, i: int, j: int) -> Column:

@@ -6,8 +6,8 @@ without rescanning it.  This module keeps a compact SIGNATURE STORE
 (LSH band keys only — ~8 md5 strings per accepted doc, never text) and
 runs, per micro-batch via ``foreachBatch``:
 
-  1. in-batch dedup: fast MinHash (k/bands from ExtractConfig) -> banded
-     candidate pairs -> min-label components -> component representatives
+  1. in-batch dedup: fast MinHash (k/bands from ExtractConfig) -> a star
+     per band bucket -> min-label components -> component representatives
      (the same operators the batch sweep uses — one code path);
   2. cross-batch dedup: join ALL batch docs' band keys against the store;
      a collision contaminates the doc's whole in-batch COMPONENT (not
@@ -43,8 +43,9 @@ from pyspark.sql.streaming import StreamingQuery
 from ..config import ExtractConfig
 from ..operators.dedup import (
     band_cols,
+    bucket_edges,
     dup_components,
-    lsh_candidate_pairs,
+    key_pairs,
     melt_bands,
     minhash_signature_fast,
 )
@@ -325,7 +326,8 @@ def _component_survivor_ids(
     ids: DataFrame, keys: DataFrame, pairs: DataFrame, store: DataFrame
 ) -> DataFrame:
     """The shared keep/drop core of BOTH modalities: in-batch components
-    over the verified pair graph, representatives, whole-component
+    over the edge graph ``pairs`` (band-bucket stars for text, verified
+    pairs for embeddings), representatives, whole-component
     contamination by any store collision (cross-batch, unverified —
     collision is not transitive and connectivity flows through dropped
     docs), survivors = uncontaminated representatives.  ``ids`` and
@@ -384,28 +386,27 @@ def dedup_batch(
 
     Returns (survivors, batch_band_keys).  NOT lazy: the signature
     projection is checkpointed and the component step runs its fixpoint
-    jobs during this call.  The slim (doc_id, band*) projection feeds
-    those jobs and both output writes, which are SEPARATE actions
-    (exchange reuse works only inside one plan), so it is materialized
-    once with an eager ``localCheckpoint`` — the mechanism
-    dup_components' rounds already use.  Nothing is cached by name: the
-    CacheManager never holds the blocks, and Spark's ContextCleaner frees
-    them, like the per-round checkpoints, once the frames referencing
-    them are garbage-collected.
+    jobs, over a star per band bucket, during this call.  The slim
+    (doc_id, band*) projection feeds those jobs and both output writes,
+    which are SEPARATE actions (exchange reuse works only inside one
+    plan), so it is materialized once with an eager ``localCheckpoint``
+    — the mechanism dup_components' rounds already use.  Nothing is
+    cached by name: the CacheManager never holds the blocks, and Spark's
+    ContextCleaner frees them, like the per-round checkpoints, once the
+    frames referencing them are garbage-collected.
     ``batch_band_keys`` covers EVERY batch doc — survivors and dropped —
     because global-dedup connectivity flows through dropped docs."""
     cfg = config or ExtractConfig()
     sigs = minhash_signature_fast(
         batch_df, k=cfg.minhash_k, n_bands=cfg.minhash_bands
     )
-    # one materialization right after the UDF: every consumer below (pair
-    # join, melt, contamination joins) reads the slim (id, bands)
+    # one materialization right after the UDF: every consumer below (star
+    # edges, contamination joins, key write) reads the slim (id, bands)
     # projection, so the signature kernel runs ONCE per batch
     slim = sigs.select("doc_id", *band_cols(sigs)).localCheckpoint(eager=True)
-    pairs = lsh_candidate_pairs(slim)
     all_keys = melt_band_keys(slim)
     survivor_ids = _component_survivor_ids(
-        slim.select("doc_id"), all_keys, pairs, store
+        slim.select("doc_id"), all_keys, bucket_edges(all_keys), store
     )
     survivors = batch_df.join(survivor_ids, "doc_id")
     batch_keys = all_keys.select("band_key").distinct()
@@ -621,14 +622,7 @@ def dedup_batch_embeddings(
         cand_keys = embedding_band_keys(
             batch_df, n_bands, cand_planes, dim=dim
         ).localCheckpoint(eager=True)
-    left = cand_keys.select(F.col("doc_id").alias("doc_a"), "band_key")
-    right = cand_keys.select(F.col("doc_id").alias("doc_b"), "band_key")
-    cand = (
-        left.join(right, "band_key")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    cand = key_pairs(cand_keys, "doc_id")
     va = batch_df.select(
         F.col("vec_id").alias("doc_a"),
         F.col("embedding").cast("array<double>").alias("va"),

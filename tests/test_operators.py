@@ -219,6 +219,31 @@ def test_dup_components_fails_loudly_past_max_rounds(spark, monkeypatch):
         dedup.dup_components(ids, pairs)
 
 
+def test_hot_bucket_gives_components_a_star_not_its_pairs(spark, monkeypatch):
+    """2 000 identical docs share every band bucket.  The components step
+    gets one edge per member (a star on the bucket's least id), not the
+    N²/2 = 1 999 000 candidate pairs, and all the docs form one component.
+    Bounded by edge count, not wall time."""
+    from docling_ocr_qwen3vl_spark.operators import dedup
+
+    n = 2000
+    real, edges = dedup.dup_components, []
+
+    def spy(ids, pairs, *args, **kwargs):
+        edges.append(pairs.count())
+        return real(ids, pairs, *args, **kwargs)
+
+    monkeypatch.setattr(dedup, "dup_components", spy)
+    docs = spark.range(n).select(
+        F.col("id").alias("doc_id"),
+        F.lit(" ".join(f"w{i}" for i in range(40))).alias("text"),
+    )
+    comps = dedup.near_duplicate_components(docs)
+    sizes = comps.groupBy("component").count().collect()
+    assert len(edges) == 1 and edges[0] <= n, edges
+    assert [(r.component, r["count"]) for r in sizes] == [(0, n)]
+
+
 def test_kmeans_refined_cells_matches_numpy_reference(spark):
     import numpy as np
 

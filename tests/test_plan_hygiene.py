@@ -106,8 +106,28 @@ def test_lsh_pair_union_plan_clean(spark, sf_dir):
     _assert_clean(buckets, "bucketed_near_duplicates")
     final, initial = _final_and_initial(buckets)
     assert 2 * final.count("bucket_udf(") == initial.count("bucket_udf(") > 0
+    # the threshold filter reads the scored column: one cosine per pair
+    assert final.count("cos_udf(") == 1, final
     assert "ReusedExchange" in final
     assert "InMemoryTableScan" not in final
+
+
+def test_simhash_pairs_run_the_kernel_once(spark, sf_dir):
+    """The block self-join runs the simhash kernel ONCE: the join's inferred
+    ``isnotnull(simhash)`` filter is not pushed below the spread exchange
+    (where it re-ran the UDF), and the second join side reuses the first's
+    exchange."""
+    from docling_ocr_qwen3vl_spark.operators.dedup import (
+        simhash,
+        simhash_near_pairs,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    pairs = simhash_near_pairs(simhash(docs))
+    _assert_clean(pairs, "simhash_near_pairs")
+    final, _ = _final_and_initial(pairs)
+    assert final.count("ArrowEvalPython") == 1, final
+    assert "ArrowEvalPython [simhash_udf(" in final
 
 
 def test_propagation_round_plan_clean(spark):

@@ -578,3 +578,27 @@ def test_replay_batch_key_separates_mutants_from_originals(spark):
     assert len(rows) == 100
     for r in rows:
         assert r.mb == (r.ob + 1) % 4, (r.ob, r.mb)
+
+
+def test_hot_bucket_batch_gives_components_a_star(spark, monkeypatch):
+    """A micro-batch of 2 000 identical docs against an empty store: the
+    in-batch components get one edge per member (a star per band bucket),
+    not the 1 999 000 pairs of the bucket clique, and exactly one doc
+    survives.  Bounded by edge count, not wall time."""
+    from docling_ocr_qwen3vl_spark.streaming import incremental_dedup
+
+    n = 2000
+    real, edges = incremental_dedup.dup_components, []
+
+    def spy(ids, pairs, *args, **kwargs):
+        edges.append(pairs.count())
+        return real(ids, pairs, *args, **kwargs)
+
+    monkeypatch.setattr(incremental_dedup, "dup_components", spy)
+    batch = spark.range(n).select(
+        F.col("id").alias("doc_id"), F.lit(BASE).alias("text")
+    )
+    store = spark.createDataFrame([], incremental_dedup.STORE_SCHEMA)
+    survivors, _ = dedup_batch(batch, store)
+    assert len(edges) == 1 and edges[0] <= n, edges
+    assert [r.doc_id for r in survivors.select("doc_id").collect()] == [0]
