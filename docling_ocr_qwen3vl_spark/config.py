@@ -115,10 +115,11 @@ class ExtractConfig:
     # extra Qwen3VlOcrOptions fields for the GPU backend (model_repo_id,
     # quantization, dtype, attention, hf_token, ...), passed through to the
     # worker-side decoder options verbatim; unknown keys are REJECTED there
-    # by Qwen3VlOcrOptions itself (extra='forbid' parity), and the
-    # first-class fields above win on collision.  This is what lets a
-    # spark-submit deployment select int4/int8 quantization or a different
-    # model repo without constructing stage options by hand (DEPLOY.md)
+    # by Qwen3VlOcrOptions itself (extra='forbid' parity), and a key naming
+    # one of the first-class fields above is rejected here.  This is what
+    # lets a spark-submit deployment select int4/int8 quantization or a
+    # different model repo without constructing stage options by hand
+    # (DEPLOY.md)
     decoder_options: dict = field(default_factory=dict)
     # per-stage enables (plugins' enabled flags): a disabled stage's pages
     # are filtered out before the decode pass (STAGE_PAYLOAD_KINDS)
@@ -144,6 +145,13 @@ class ExtractConfig:
             raise ValueError(f"page_scale must be <= 4.0, got {self.page_scale}")
         if self.prompt_mode not in PROMPT_MODES:
             raise ValueError(f"unknown prompt_mode: {self.prompt_mode}")
+        for name in ("prompt_mode", "prompt_overrides", "page_scale", "force_valid_json"):
+            if name in self.decoder_options:
+                # decode_pages writes the first-class field over it
+                raise ValueError(
+                    f"decoder_options[{name!r}] would be ignored: set "
+                    f"ExtractConfig.{name} instead"
+                )
 
     def prompt(self) -> str:
         return resolve_prompt(self.prompt_mode, self.prompt_overrides)

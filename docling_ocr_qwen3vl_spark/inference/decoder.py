@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import time
 
-from ..semantics.geometry import build_clusters, build_table
+from ..semantics.geometry import layout_boxes, table_cells
 from ..semantics.html_parse import parse_qwenvl_html
 from ..semantics.json_repair import parse_array, parse_object
 from ..semantics.text import split_paragraphs
@@ -60,6 +60,10 @@ class DeterministicDecoder:
 
     def __init__(self, simulate_cost_us: int = 0):
         self.simulate_cost_us = simulate_cost_us
+
+    def decode_batch(self, pages: list[tuple]) -> list[list[tuple]]:
+        """``pages`` = [(payload_kind, payload)] -> one element list per page."""
+        return [self.decode_page(kind, payload) for kind, payload in pages]
 
     def decode_page(self, payload_kind: str, payload: str) -> list[tuple]:
         if self.simulate_cost_us:
@@ -101,17 +105,19 @@ class DeterministicDecoder:
 
     @staticmethod
     def _decode_layout(payload: str) -> list[tuple]:
-        clusters = build_clusters(parse_array(payload), 1000.0, 1000.0)
+        # anchor = the cluster's (t, l) on a 1000x1000 page, as build_clusters
+        # would rescale it
         out: list[tuple] = []
-        for c in clusters:
-            if c["label"] in MEDIA_LABELS:
-                out.append((len(out), MEDIA, "", int(c["t"]), int(c["l"])))
+        for _, label, _, x1, y1, _, _ in layout_boxes(parse_array(payload)):
+            if label in MEDIA_LABELS:
+                out.append(
+                    (len(out), MEDIA, "", int((y1 / 1000) * 1000.0), int((x1 / 1000) * 1000.0))
+                )
         return out
 
     @staticmethod
     def _decode_table(payload: str) -> list[tuple]:
-        table = build_table(parse_object(payload), (0.0, 0.0, 1000.0, 1000.0), (1.0, 1.0))
-        return [(0, MEDIA, "", 0, 0)] if table is not None else []
+        return [(0, MEDIA, "", 0, 0)] if table_cells(parse_object(payload)) is not None else []
 
 
 class TorchQwenDecoder:
@@ -320,7 +326,7 @@ class TorchQwenDecoder:
     ) -> str:
         """One page through the T12 walk; returns serialized JSON so the
         result flows through the SAME structural parse as every other
-        path (parse -> build_clusters/build_table)."""
+        path (parse -> layout_boxes/table_cells)."""
         import json as _json
 
         from .jsonformer import JSONFORMER_SCHEMAS, JsonformerWalk, TorchTokenBackend

@@ -1,14 +1,9 @@
 """G5 + T6-T10: layout JSON -> cluster rows (repair cascade + build).
 
-The reference repairs near-JSON from the VLM, then builds clusters with
-label mapping, min/max coordinate normalization, zero-area drop, and
-0-1000 -> page-coordinate rescale (layout_model.py:184-232,
-_vlm_jsonformer.py:163-194).
-
-Split for scale: the repair CASCADE + parse runs in a vectorized pandas UDF
-(try/except control flow), emitting normalized 0-1000 clusters; the page
-rescale stays JVM-side column arithmetic so Catalyst can fuse it with
-downstream filters.
+The repair cascade (``semantics/json_repair.parse_array``) and the cluster
+rules (``semantics/geometry.layout_boxes``) run in a ``mapInPandas`` kernel
+that emits 0-1000 clusters; the page rescale stays JVM-side column
+arithmetic so Catalyst can fuse it with downstream filters.
 """
 
 from __future__ import annotations
@@ -44,62 +39,24 @@ CLUSTERS_SCHEMA = StructType(
 
 
 def _parse_layout_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from docling_ocr_qwen3vl_spark.semantics.geometry import (
-        DEFAULT_CONFIDENCE,
-        DEFAULT_LABEL,
-        LABEL_MAP,
-    )
+    from docling_ocr_qwen3vl_spark.semantics.geometry import layout_boxes
     from docling_ocr_qwen3vl_spark.semantics.json_repair import parse_array
 
     for batch in batches:
-        cols: dict[str, list] = {name: [] for name in CLUSTERS_SCHEMA.names}
+        rows: list[tuple] = []
         for doc_id, page_no, payload, pw, ph in zip(
             batch["doc_id"], batch["page_no"], batch["payload"],
             batch["page_width"], batch["page_height"]
         ):
-            for idx, elem in enumerate(parse_array(payload or "")):
-                if not isinstance(elem, dict):
-                    continue
-                bbox = elem.get("bbox")
-                if bbox and isinstance(bbox, list) and len(bbox) == 4:
-                    x1, y1, x2, y2 = bbox
-                else:
-                    x1 = elem.get("x1", 0)
-                    y1 = elem.get("y1", 0)
-                    x2 = elem.get("x2", 1000)
-                    y2 = elem.get("y2", 1000)
-                x1, x2 = min(x1, x2), max(x1, x2)
-                y1, y2 = min(y1, y2), max(y1, y2)
-                if x1 == x2 or y1 == y2:
-                    continue
-                cols["doc_id"].append(doc_id)
-                cols["page_no"].append(page_no)
-                cols["cluster_id"].append(idx)
-                cols["label"].append(
-                    LABEL_MAP.get(str(elem.get("label", "text")).lower(), DEFAULT_LABEL)
+            size = (None if pd.isna(pw) else float(pw), None if pd.isna(ph) else float(ph))
+            for idx, label, confidence, x1, y1, x2, y2 in layout_boxes(
+                parse_array(payload or "")
+            ):
+                rows.append(
+                    (doc_id, page_no, idx, label, confidence,
+                     float(x1), float(y1), float(x2), float(y2)) + size
                 )
-                cols["confidence"].append(float(elem.get("confidence", DEFAULT_CONFIDENCE)))
-                cols["nx1"].append(float(x1))
-                cols["ny1"].append(float(y1))
-                cols["nx2"].append(float(x2))
-                cols["ny2"].append(float(y2))
-                cols["page_width"].append(None if pd.isna(pw) else float(pw))
-                cols["page_height"].append(None if pd.isna(ph) else float(ph))
-        yield pd.DataFrame(
-            {
-                "doc_id": pd.Series(cols["doc_id"], dtype="object"),
-                "page_no": pd.Series(cols["page_no"], dtype="int32"),
-                "cluster_id": pd.Series(cols["cluster_id"], dtype="int32"),
-                "label": pd.Series(cols["label"], dtype="object"),
-                "confidence": pd.Series(cols["confidence"], dtype="float64"),
-                "nx1": pd.Series(cols["nx1"], dtype="float64"),
-                "ny1": pd.Series(cols["ny1"], dtype="float64"),
-                "nx2": pd.Series(cols["nx2"], dtype="float64"),
-                "ny2": pd.Series(cols["ny2"], dtype="float64"),
-                "page_width": pd.Series(cols["page_width"], dtype="float64"),
-                "page_height": pd.Series(cols["page_height"], dtype="float64"),
-            }
-        )
+        yield pd.DataFrame(rows, columns=CLUSTERS_SCHEMA.names)
 
 
 def parse_layout_clusters(pages: DataFrame) -> DataFrame:

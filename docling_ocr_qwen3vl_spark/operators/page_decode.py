@@ -58,11 +58,6 @@ def _make_decode_batches(backend: str, decoder_opts: dict | None):
         decoder = get_decoder(
             backend, simulate_cost_us=cost_us, decoder_opts=decoder_opts
         )
-        decode_page = decoder.decode_page
-        # backends exposing decode_batch (the GPU path) get the whole Arrow
-        # batch at once and micro-batch model calls internally (M3); the
-        # deterministic kernel stays per-row (no batching win to be had)
-        decode_batch = getattr(decoder, "decode_batch", None)
         for batch in batches:
             doc_ids: list[str] = []
             page_nos: list[int] = []
@@ -71,20 +66,14 @@ def _make_decode_batches(backend: str, decoder_opts: dict | None):
             texts: list[str] = []
             y1s: list[int] = []
             x1s: list[int] = []
-            if decode_batch is not None:
-                page_results = decode_batch(
-                    list(zip(batch["payload_kind"], batch["payload"]))
-                )
-            else:
-                page_results = None
-            for row_idx, (doc_id, page_no, payload_kind, payload) in enumerate(zip(
-                batch["doc_id"], batch["page_no"], batch["payload_kind"], batch["payload"]
-            )):
-                elements = (
-                    page_results[row_idx]
-                    if page_results is not None
-                    else decode_page(payload_kind, payload)
-                )
+            # the whole Arrow batch at once: the GPU backend micro-batches
+            # its model calls inside (M3)
+            page_results = decoder.decode_batch(
+                list(zip(batch["payload_kind"], batch["payload"]))
+            )
+            for doc_id, page_no, elements in zip(
+                batch["doc_id"], batch["page_no"], page_results
+            ):
                 for seq, kind, text, y1, x1 in elements:
                     doc_ids.append(doc_id)
                     page_nos.append(page_no)
@@ -128,9 +117,8 @@ def decode_pages(raw_pages: DataFrame, config=None) -> DataFrame:
 
     cfg = config or ExtractConfig()
     decoder_opts = {
-        # decoder_options first: the first-class pipeline fields win on
-        # collision (a deploy-time passthrough must not silently override
-        # what the plan was built with)
+        # ExtractConfig rejects decoder_options keys that collide with
+        # these first-class fields
         **dict(cfg.decoder_options),
         "prompt_mode": cfg.prompt_mode,
         "prompt_overrides": dict(cfg.prompt_overrides),

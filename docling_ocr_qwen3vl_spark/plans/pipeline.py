@@ -109,8 +109,3 @@ def extract_spans_from_interleaved(
     )
     return number_spans(decoded.unionByName(media_rows))
 
-
-def write_spans(spans_docs: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Sink. Iceberg ``writeTo(...).append()`` on a cluster with a catalog;
-    parquet in the sandbox (S5 in SURVEY.md §2.1)."""
-    spans_docs.write.mode(mode).parquet(path)

@@ -1,8 +1,9 @@
 """Geometry / structure builders — reference parity, pure Python.
 
-Dict-based versions of the reference's cell/cluster/table builders.  They are
-the unit-test oracles for the Spark column-expression forms in
-``operators/`` (which is where the at-scale implementations live).
+Dict-based versions of the reference's cell/cluster/table builders.
+``layout_boxes`` and ``table_cells`` are the one definition of the layout
+and table rules: ``build_clusters``/``build_table``, the ``operators/``
+layout and table kernels and the page decoder all build on them.
 
 Reference citations:
   - paragraphs -> cells:      model.py:136-189  (G1)
@@ -13,6 +14,7 @@ Reference citations:
 
 from __future__ import annotations
 
+from collections.abc import Iterator
 from typing import Any
 
 # layout_model.py:34-49 — prompt label -> canonical docling label.
@@ -142,41 +144,46 @@ def html_elements_to_cells(
     return cells
 
 
-def build_clusters(
-    elements: list[dict[str, Any]],
-    page_width: float | None,
-    page_height: float | None,
-) -> list[dict[str, Any]]:
-    """Layout JSON elements -> clusters (layout_model.py:184-232).
+def layout_boxes(elements: list) -> Iterator[tuple]:
+    """Layout JSON elements -> ``(id, label, confidence, x1, y1, x2, y2)``
+    in 0-1000 space (layout_model.py:184-232).
 
-    Per element: label via LABEL_MAP (default text), confidence default 0.9,
-    bbox from nested ``bbox`` (len 4) else flat x1/y1/x2/y2 (defaults
-    0,0,1000,1000), min/max coordinate normalization, zero-area drop,
-    0-1000 -> page coords (or the (0,0,100,100) fallback when the page has no
-    size).  Cluster id = ORIGINAL element index (ids skip dropped elements).
+    Non-dict elements are skipped.  Per element: bbox from nested ``bbox``
+    (len 4) else flat x1/y1/x2/y2 (defaults 0,0,1000,1000), min/max
+    coordinate normalization, zero-area drop; label via LABEL_MAP (default
+    text), confidence default 0.9 as a float.  id = ORIGINAL element index
+    (ids skip dropped elements).  Coordinates come back as parsed; each
+    caller converts or rescales them.
     """
-    clusters: list[dict[str, Any]] = []
     for idx, elem in enumerate(elements):
         if not isinstance(elem, dict):
             continue
-        label_str = str(elem.get("label", "text")).lower()
-        confidence = elem.get("confidence", DEFAULT_CONFIDENCE)
-        label = LABEL_MAP.get(label_str, DEFAULT_LABEL)
-
-        bbox_data = elem.get("bbox")
-        if bbox_data and isinstance(bbox_data, list) and len(bbox_data) == 4:
-            x1, y1, x2, y2 = bbox_data
+        bbox = elem.get("bbox")
+        if bbox and isinstance(bbox, list) and len(bbox) == 4:
+            x1, y1, x2, y2 = bbox
         else:
             x1 = elem.get("x1", 0)
             y1 = elem.get("y1", 0)
             x2 = elem.get("x2", 1000)
             y2 = elem.get("y2", 1000)
-
         x1, x2 = min(x1, x2), max(x1, x2)
         y1, y2 = min(y1, y2), max(y1, y2)
         if x1 == x2 or y1 == y2:
             continue
+        label = LABEL_MAP.get(str(elem.get("label", "text")).lower(), DEFAULT_LABEL)
+        yield idx, label, float(elem.get("confidence", DEFAULT_CONFIDENCE)), x1, y1, x2, y2
 
+
+def build_clusters(
+    elements: list[dict[str, Any]],
+    page_width: float | None,
+    page_height: float | None,
+) -> list[dict[str, Any]]:
+    """Layout JSON elements -> clusters: ``layout_boxes`` rescaled from
+    0-1000 to page coords, or the (0,0,100,100) fallback when the page has
+    no size (layout_model.py:221)."""
+    clusters: list[dict[str, Any]] = []
+    for idx, label, confidence, x1, y1, x2, y2 in layout_boxes(elements):
         if page_width and page_height:
             box = (
                 (x1 / 1000) * page_width,
@@ -186,12 +193,11 @@ def build_clusters(
             )
         else:
             box = (0.0, 0.0, 100.0, 100.0)
-
         clusters.append(
             {
                 "id": idx,
                 "label": label,
-                "confidence": float(confidence),
+                "confidence": confidence,
                 "l": box[0],
                 "t": box[1],
                 "r": box[2],
@@ -215,47 +221,63 @@ def build_otsl(num_rows: int, num_cols: int) -> list[str]:
     return seq
 
 
-def build_table(
-    data: dict[str, Any],
-    table_bbox: tuple[float, float, float, float],
-    page_size: tuple[float, float] | None,
-) -> dict[str, Any] | None:
-    """Table JSON -> table struct (table_structure_model.py:135-225).
+def table_cells(data: dict[str, Any]) -> tuple[int, int, list[tuple]] | None:
+    """Table JSON -> ``(n_rows, n_cols, cells)`` (table_structure_model.py:135-225).
 
-    ``rows``/``cols`` of 0 -> None.  Cells accept BOTH legacy
-    (row_span/col_span/is_header/bbox[4]) and compact (rs/cs/hdr/x1..y2)
-    field names, legacy taking precedence.  Cell bboxes are 0-1000 relative
-    to the TABLE crop, rescaled into page coordinates via the table bbox;
-    bbox is None when unparseable or the page has no size.
+    ``rows``/``cols`` of 0 -> None.  Non-dict cells are skipped.  Each cell
+    is ``(row, col, row_span, col_span, text, is_header, bbox)``; cells
+    accept BOTH legacy (row_span/col_span/is_header/bbox[4]) and compact
+    (rs/cs/hdr/x1..y2) field names, legacy taking precedence.  ``bbox`` is
+    the raw 0-1000 box relative to the TABLE crop, or None when absent or
+    not four values long.
     """
     num_rows = int(data.get("rows", 0) or 0)
     num_cols = int(data.get("cols", 0) or 0)
     if num_rows == 0 or num_cols == 0:
         return None
-
-    tl, tt, tr, tb = table_bbox
-    tw = tr - tl
-    th = tb - tt
-
     cells = []
     for cell in data.get("cells", []) or []:
         if not isinstance(cell, dict):
             continue
-        row = int(cell.get("row", 0) or 0)
-        col = int(cell.get("col", 0) or 0)
-        row_span = int(cell.get("row_span", cell.get("rs", 1)) or 1)
-        col_span = int(cell.get("col_span", cell.get("cs", 1)) or 1)
-        text = cell.get("text", "")
-        is_header = bool(cell.get("is_header", cell.get("hdr", False)))
-
         bbox = cell.get("bbox", None)
         if not bbox or not isinstance(bbox, list):
             x1 = cell.get("x1")
             if x1 is not None:
                 bbox = [x1, cell.get("y1", 0), cell.get("x2", 1000), cell.get("y2", 1000)]
+        cells.append(
+            (
+                int(cell.get("row", 0) or 0),
+                int(cell.get("col", 0) or 0),
+                int(cell.get("row_span", cell.get("rs", 1)) or 1),
+                int(cell.get("col_span", cell.get("cs", 1)) or 1),
+                cell.get("text", ""),
+                bool(cell.get("is_header", cell.get("hdr", False))),
+                bbox if bbox and len(bbox) == 4 else None,
+            )
+        )
+    return num_rows, num_cols, cells
 
+
+def build_table(
+    data: dict[str, Any],
+    table_bbox: tuple[float, float, float, float],
+    page_size: tuple[float, float] | None,
+) -> dict[str, Any] | None:
+    """Table JSON -> table struct: ``table_cells`` with each cell bbox
+    rescaled into page coordinates through the table bbox (None when
+    unparseable or the page has no size), plus the OTSL skeleton."""
+    parsed = table_cells(data)
+    if parsed is None:
+        return None
+    num_rows, num_cols, raw_cells = parsed
+    tl, tt, tr, tb = table_bbox
+    tw = tr - tl
+    th = tb - tt
+
+    cells = []
+    for row, col, row_span, col_span, text, is_header, bbox in raw_cells:
         cell_bbox = None
-        if bbox and len(bbox) == 4 and page_size:
+        if bbox is not None and page_size:
             x1, y1, x2, y2 = bbox
             cell_bbox = (
                 tl + (x1 / 1000) * tw,
@@ -263,7 +285,6 @@ def build_table(
                 tl + (x2 / 1000) * tw,
                 tt + (y2 / 1000) * th,
             )
-
         cells.append(
             {
                 "row": row,

@@ -8,7 +8,6 @@ from pyspark.sql import Row
 from docling_ocr_qwen3vl_spark import ExtractConfig, extract
 from docling_ocr_qwen3vl_spark.operators.page_decode import decode_pages
 from docling_ocr_qwen3vl_spark.operators.spans import assemble_documents, number_spans
-from docling_ocr_qwen3vl_spark.plans.pipeline import write_spans
 
 
 def test_extract_api_flat_and_nested(spark, sf_dir):
@@ -27,7 +26,7 @@ def test_nested_output_survives_parquet_roundtrip(spark, sf_dir, tmp_path):
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).limit(30)
     nested = extract(spark, docs, nested=True)
     out = str(tmp_path / "spans_nested")
-    write_spans(nested, out)
+    nested.write.mode("overwrite").parquet(out)
     back = spark.read.parquet(out)
     want = {r.doc_id: [s.asDict() for s in r.spans] for r in nested.collect()}
     got = {r.doc_id: [s.asDict() for s in r.spans] for r in back.collect()}

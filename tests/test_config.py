@@ -67,9 +67,9 @@ def test_force_valid_json_flows_from_extract_config(monkeypatch, spark):
 def test_decoder_options_passthrough_reaches_worker_opts(monkeypatch, spark):
     """ExtractConfig.decoder_options (the spark-submit deployment's
     quantization/model-repo knobs — DEPLOY.md) merges into the worker
-    decoder opts, with the first-class pipeline fields winning on
-    collision, and the merged dict still round-trips into
-    Qwen3VlOcrOptions."""
+    decoder opts beside the first-class pipeline fields, a key naming one
+    of those fields is rejected, and the merged dict still round-trips
+    into Qwen3VlOcrOptions."""
     from docling_ocr_qwen3vl_spark.config import ExtractConfig, Qwen3VlOcrOptions
     from docling_ocr_qwen3vl_spark.operators import page_decode
 
@@ -85,13 +85,11 @@ def test_decoder_options_passthrough_reaches_worker_opts(monkeypatch, spark):
         [(1, 0, "plain_text", "hello world")],
         "doc_id long, page_no int, payload_kind string, payload string",
     )
+    with pytest.raises(ValueError, match=r"ExtractConfig\.prompt_mode"):
+        ExtractConfig(prompt_mode="ocr", decoder_options={"prompt_mode": "markdown"})
     cfg = ExtractConfig(
         prompt_mode="ocr",
-        decoder_options={
-            "quantization": "int4",
-            "model_repo_id": "owner/other-model",
-            "prompt_mode": "markdown",  # collides -> first-class wins
-        },
+        decoder_options={"quantization": "int4", "model_repo_id": "owner/other-model"},
     )
     page_decode.decode_pages(raw, config=cfg)
     assert seen["opts"]["quantization"] == "int4"
@@ -99,6 +97,24 @@ def test_decoder_options_passthrough_reaches_worker_opts(monkeypatch, spark):
     assert seen["opts"]["prompt_mode"] == "ocr"
     opts = Qwen3VlOcrOptions(**seen["opts"])
     assert opts.quantization == "int4"
+
+
+@pytest.mark.parametrize(
+    "name, value",
+    [
+        ("prompt_mode", "markdown"),
+        ("prompt_overrides", {"ocr": "x"}),
+        ("page_scale", 3.0),
+        ("force_valid_json", True),
+    ],
+)
+def test_decoder_options_rejects_first_class_fields(name, value):
+    """decode_pages writes the four first-class decode fields over
+    decoder_options, so a decoder_options entry for one of them could only
+    be thrown away (e.g. ``{"force_valid_json": True}`` would still run the
+    single-shot JSON path).  It is rejected, naming the field to use."""
+    with pytest.raises(ValueError, match=rf"ExtractConfig\.{name}\b"):
+        ExtractConfig(decoder_options={name: value})
 
 
 def test_decoder_options_unknown_key_rejected_with_name():

@@ -79,6 +79,115 @@ def test_table_operator_dual_names_and_null_table(spark):
     assert c.cell_row is None and c.otsl == "cell l cell l cell"
 
 
+_LAYOUT_EDGES = [
+    # nested bbox, mapped label, explicit confidence
+    '[{"label":"Figure","bbox":[10,20,300,400],"confidence":0.5}]',
+    # swapped corners, zero area (both axes), defaults, unknown label
+    '[{"label":"table","x1":900,"y1":800,"x2":100,"y2":200},'
+    '{"label":"text","x1":5,"y1":5,"x2":5,"y2":50},'
+    '{"label":"text","x1":5,"y1":7,"x2":50,"y2":7},'
+    '{"label":"mystery"},{}]',
+    # non-dict elements; a short nested bbox falls back to the flat names
+    '[1,"x",null,[1,2,3,4],{"label":"caption","bbox":[1,2,3],"x1":10,"y1":20,"x2":30,"y2":40}]',
+    # repairable corruption: corrupted key, trailing comma, truncation
+    'noise [{"label":"picture","x1":1,"y1:2,"x2":30,"y2":40},{"label":"code","x1":3,',
+    '[{"label":"title","x1":0,"y1":0,"x2":10,"y2":10},] tail',
+    "not json at all",
+]
+
+_TABLE_EDGES = [
+    # legacy and compact names, legacy winning when both are present
+    '{"rows":2,"cols":2,"cells":['
+    '{"row":0,"col":0,"text":"H","rs":2,"cs":1,"hdr":true,"x1":0,"y1":0,"x2":500,"y2":100},'
+    '{"row":1,"col":0,"text":"x","row_span":1,"col_span":2,"is_header":false,'
+    '"bbox":[0,100,1000,200]},'
+    '{"row":1,"col":1,"text":"both","row_span":3,"rs":5,"is_header":false,"hdr":true}]}',
+    # flat bbox with only x1; a bbox of the wrong length; non-dict cells
+    '{"rows":1,"cols":3,"cells":[{"row":0,"col":2,"x1":7},{"bbox":[1,2]},1,"c",null]}',
+    '{"rows":0,"cols":2,"cells":[{"row":0,"col":0}]}',
+    '{"rows":3,"cols":1}',
+    # repairable corruption: corrupted key, trailing comma, unclosed brackets
+    '{"rows":1,"cols":1,"cells":[{"row":0,"col:0,"text":"k","bbox":[1,2,3,4]},',
+    "garbage",
+]
+
+
+def _parity_pages(spark, sf_dir, kind, edges):
+    from docling_ocr_qwen3vl_spark.sources.synthetic import synth_raw_pages
+
+    cols = ["doc_id", "page_no", "payload", "page_width", "page_height"]
+    synthetic = [
+        tuple(r) for r in synth_raw_pages(spark, sf_dir)
+        .filter(F.col("payload_kind") == kind).select(*cols).collect()
+    ]
+    sizes = [(612.0, 792.0), (None, None)]
+    edge_rows = [
+        (f"edge{i}", j, p, *size)
+        for i, p in enumerate(edges) for j, size in enumerate(sizes)
+    ]
+    schema = ("doc_id string, page_no int, payload string, "
+              "page_width double, page_height double")
+    return synthetic + edge_rows, spark.createDataFrame(synthetic + edge_rows, schema)
+
+
+def test_layout_operator_matches_build_clusters(spark, sf_dir):
+    """The layout_clusters kernel + JVM rescale and the flagship's
+    build_clusters read one set of rules (semantics/geometry.layout_boxes):
+    same clusters for every synthetic layout page and every edge payload."""
+    from docling_ocr_qwen3vl_spark.operators.layout import parse_layout_clusters
+    from docling_ocr_qwen3vl_spark.semantics.geometry import build_clusters
+    from docling_ocr_qwen3vl_spark.semantics.json_repair import parse_array
+
+    pages, df = _parity_pages(spark, sf_dir, "layout_json", _LAYOUT_EDGES)
+    got: dict = {}
+    for r in parse_layout_clusters(df).collect():
+        got.setdefault((r.doc_id, r.page_no), []).append(
+            (r.cluster_id, r.label, r.confidence, r.l, r.t, r.r, r.b)
+        )
+    want = {}
+    for doc_id, page_no, payload, pw, ph in pages:
+        clusters = build_clusters(parse_array(payload), pw, ph)
+        if clusters:
+            want[(doc_id, page_no)] = [
+                (c["id"], c["label"], c["confidence"], c["l"], c["t"], c["r"], c["b"])
+                for c in clusters
+            ]
+    assert {k: sorted(v) for k, v in got.items()} == want
+    assert len(pages) > len(_LAYOUT_EDGES) * 2 and ("edge1", 0) in want
+
+
+def test_table_operator_matches_table_cells(spark, sf_dir):
+    """The table_cells kernel and the flagship's table rules are one
+    definition (semantics/geometry.table_cells): same cells, the same
+    cell-less table row and the same OTSL for every synthetic table page
+    and every edge payload."""
+    from docling_ocr_qwen3vl_spark.semantics.geometry import build_otsl, table_cells
+    from docling_ocr_qwen3vl_spark.semantics.json_repair import parse_object
+
+    pages, df = _parity_pages(spark, sf_dir, "table_json", _TABLE_EDGES)
+    cell_cols = ["n_rows", "n_cols", "cell_row", "cell_col", "row_span", "col_span",
+                 "end_row", "end_col", "cell_text", "col_header", "cx1", "cy1", "cx2", "cy2"]
+    got: dict = {}
+    for r in parse_table_cells(df).collect():
+        assert r.otsl == " ".join(build_otsl(r.n_rows, r.n_cols))
+        got.setdefault((r.doc_id, r.page_no), []).append(tuple(r[c] for c in cell_cols))
+    want = {}
+    for doc_id, page_no, payload, _, _ in pages:
+        parsed = table_cells(parse_object(payload))
+        if parsed is None:
+            continue
+        n_rows, n_cols, cells = parsed
+        want[(doc_id, page_no)] = [
+            (n_rows, n_cols, row, col, rs, cs, row + rs, col + cs, text, hdr)
+            + (tuple(map(float, bbox)) if bbox is not None else (None,) * 4)
+            for row, col, rs, cs, text, hdr, bbox in cells
+        ] or [(n_rows, n_cols) + (None,) * 12]
+    assert {k: sorted(v, key=str) for k, v in got.items()} == {
+        k: sorted(v, key=str) for k, v in want.items()
+    }
+    assert ("edge2", 0) not in want and want[("edge3", 0)] == [(3, 1) + (None,) * 12]
+
+
 def test_enrichment_operators(spark):
     pics = spark.createDataFrame([
         Row(doc_id=1, payload='x {"classes":[{"confidence":0.3}]} y'),

@@ -229,3 +229,38 @@ def test_package_caches_nothing_by_name():
             ):
                 found.append(f"{path.relative_to(root)}:{node.lineno} {name}")
     assert not found, found
+
+
+def test_layout_and_table_rules_live_in_geometry_only():
+    """The G5 layout and G9 table rules have one definition,
+    ``semantics/geometry.layout_boxes``/``table_cells``: no module under
+    ``operators/`` or ``inference/`` reads a legacy/compact cell name or
+    maps labels itself, so a fix cannot leave a second copy behind."""
+    import ast
+    from pathlib import Path
+
+    import docling_ocr_qwen3vl_spark
+
+    root = Path(docling_ocr_qwen3vl_spark.__file__).parent
+    cell_names = {"row_span", "col_span", "is_header", "hdr"}
+    found = []
+    for sub in ("operators", "inference"):
+        for path in sorted((root / sub).rglob("*.py")):
+            for node in ast.walk(ast.parse(path.read_text(), str(path))):
+                where = f"{path.relative_to(root)}:{getattr(node, 'lineno', 0)}"
+                if (
+                    isinstance(node, ast.Call)
+                    and getattr(node.func, "attr", None) == "get"
+                    and any(
+                        isinstance(a, ast.Constant) and a.value in cell_names
+                        for a in node.args
+                    )
+                ):
+                    found.append(f"{where} .get({ast.unparse(node.args[0])})")
+                if (isinstance(node, ast.Name) and node.id == "LABEL_MAP") or (
+                    isinstance(node, ast.Attribute) and node.attr == "LABEL_MAP"
+                ) or (
+                    isinstance(node, ast.alias) and node.name == "LABEL_MAP"
+                ):
+                    found.append(f"{where} LABEL_MAP")
+    assert not found, found
